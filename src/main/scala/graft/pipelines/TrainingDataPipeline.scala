@@ -659,7 +659,10 @@ object TrainingDataPipeline {
     * probability is one division of exact integers, `ln` is the one
     * ±1-ulp step absorbed by pround(6) on a batches×buckets-bounded
     * output, and the headline PSI rides a RUNNING window sum in pinned
-    * bucket order (partitioned by batch — never a global window).
+    * bucket order. Within one increment `batch` is a literal, so every
+    * window's partitionBy(batch) constant-folds away: the windows are
+    * single-partition, but over the nBuckets-row bucket grid only —
+    * metadata scale by construction (PlanSpec pins that shape).
     * Retry-idempotent like the dedup state: a re-run of the same
     * batchId overwrites its own partition and reads the same prior
     * state.

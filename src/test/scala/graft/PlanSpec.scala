@@ -26,6 +26,27 @@ class PlanSpec extends SparkSpec {
     """windowspecdefinition\([^,()]*\s(?:ASC|DESC)""".r.findAllIn(p).length +
       """windowspecdefinition\(specifiedwindowframe""".r.findAllIn(p).length
 
+  /** One entry per `SinglePartition` exchange: the detail blocks of that
+    * exchange and of every operator under it, i.e. everything its single
+    * reducer consumes. The tree section renders each child at a deeper
+    * name column than its parent, so a subtree is the run of following
+    * tree lines indented past the root. */
+  private def singlePartitionSubtrees(p: String): Seq[String] = {
+    val details = p.split("\n{2,}").flatMap { b =>
+      """^\((\d+)\) """.r.findPrefixMatchOf(b).map(_.group(1).toInt -> b)
+    }.toMap
+    val tree = p.linesIterator.drop(1).takeWhile(_.trim.nonEmpty).toVector
+    def col(l: String) = l.indexWhere(_.isLetter)
+    def id(l: String) = """\((\d+)\)$""".r.findFirstMatchIn(l)
+      .map(_.group(1).toInt)
+    tree.indices.filter(i => id(tree(i)).flatMap(details.get)
+        .exists(_.contains("Arguments: SinglePartition")))
+      .map { i =>
+        (tree(i) +: tree.drop(i + 1).takeWhile(col(_) > col(tree(i))))
+          .flatMap(id).flatMap(details.get).mkString("\n\n")
+      }
+  }
+
   test("filter+project pushes predicates and prunes columns at the scan") {
     val p = plan(Queries.filterProject(spark, sf0001))
     assert(p.contains("PushedFilters"), "no pushdown section in scan")
@@ -1680,12 +1701,19 @@ class PlanSpec extends SparkSpec {
       assert(!p.contains("CartesianProduct"),
         s"only 1-row broadcast scalar attaches belong here:\n$p")
       // within ONE increment `batch` is a literal, so Catalyst
-      // constant-folds it out of the two window specs (psi_cum + the
-      // drift max — the q241 fold pattern): exactly 2 single-partition
-      // windows over the 16-row bucket grid, metadata scale by
-      // construction. A third would mean someone widened the frame.
-      assert(unpartitionedWindows(p) == 2,
-        s"expected exactly the 2 bucket-grid windows:\n$p")
+      // constant-folds it out of every window spec (the q241 fold
+      // pattern). readoutDrift plans four window expressions: the
+      // totals nt_ref and nt_cur (which share one Window operator),
+      // psi_cum, and the drift max. Formatted explain prints one
+      // windowspecdefinition per window EXPRESSION, not per Window
+      // operator (CLAUDE.md), so the pin is 4. All four are
+      // single-partition over the 16-row bucket grid: one
+      // SinglePartition exchange fed by the Range (0, 16) grid, metadata
+      // scale by construction. A fifth window, or a second single
+      // reducer, would mean someone widened the frame.
+      assert(unpartitionedWindows(p) == 4,
+        s"expected exactly the 4 bucket-grid windows:\n$p")
+      assertGridReducer(p)
       assert(p.contains("BroadcastHashJoin"),
         s"the bucket-grid joins against 16-row histograms must broadcast:\n$p")
     } finally {
@@ -1694,6 +1722,16 @@ class PlanSpec extends SparkSpec {
       }
       rm(new java.io.File(root))
     }
+  }
+
+  /** The drift readout has exactly one single reducer, and it sits over
+    * the 16-row bucket grid (the probe side of the histogram joins). */
+  private def assertGridReducer(p: String): Unit = {
+    val reducers = singlePartitionSubtrees(p)
+    assert(reducers.size == 1,
+      s"expected exactly one SinglePartition exchange:\n$p")
+    assert(reducers.head.contains("Range (0, 16, step=1"),
+      s"the single reducer must sit over the 16-row bucket grid:\n$p")
   }
 
   test("keyed drift increment (q251 path): same metadata-scale posture as the length monitor") {
@@ -1711,8 +1749,10 @@ class PlanSpec extends SparkSpec {
         .driftIncrementBy(arrival(1), bucket, root, 1L))
       assert(!p.contains("CartesianProduct"),
         s"only 1-row broadcast scalar attaches belong here:\n$p")
-      assert(unpartitionedWindows(p) == 2,
-        s"expected exactly the 2 bucket-grid windows:\n$p")
+      // same four bucket-grid windows as the length monitor (see above)
+      assert(unpartitionedWindows(p) == 4,
+        s"expected exactly the 4 bucket-grid windows:\n$p")
+      assertGridReducer(p)
       assert(p.contains("BroadcastHashJoin"),
         s"the bucket-grid joins against 16-row histograms must broadcast:\n$p")
     } finally {
