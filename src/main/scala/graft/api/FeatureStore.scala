@@ -112,6 +112,11 @@ object FeatureStore {
 
 /** The user-facing facade wiring registry + offline PIT retrieval +
   * materialization + online serving (reference M1-M7, SURVEY §2.8).
+  *
+  * Each call reads the registry once ([[Registry.snapshot]]) and
+  * resolves views, features and join keys from that one document
+  * version; the next call reads it again, so another session's `apply`
+  * shows on the next call.
   */
 final class FeatureStore(
     val spark: SparkSession,
@@ -132,8 +137,7 @@ final class FeatureStore(
   def listEntities(): Seq[Entity] = registry.listEntities()
   def listDataSources(): Seq[SparkSource] = registry.listDataSources()
   def getFeatureView(name: String): FeatureView =
-    registry.getFeatureView(name).getOrElse(
-      throw new NoSuchElementException(s"feature view '$name' not registered"))
+    registry.snapshot().featureView(name)
 
   /** ANALYZE a registered view's source: harvest the per-join-key
     * count histogram and persist it beside the registry document
@@ -144,8 +148,9 @@ final class FeatureStore(
     * have nowhere durable to put statistics.
     */
   def analyze(viewName: String): String = {
-    val fv = getFeatureView(viewName)
-    val keys = resolveJoinKeys(fv)
+    val reg = registry.snapshot()
+    val fv = reg.featureView(viewName)
+    val keys = reg.joinKeys(fv)
     val registryPath = config.registryPath.getOrElse(throw new IllegalStateException(
       "analyze() needs a file-backed registry (config.registryPath) to place stats next to"))
     val path = StatsStore.statsPath(registryPath, fv.name, keys)
@@ -161,9 +166,10 @@ final class FeatureStore(
 
   /** Read a view's persisted key histogram (None if never analyzed). */
   def statsFor(viewName: String): Option[DataFrame] = {
-    val fv = getFeatureView(viewName)
+    val reg = registry.snapshot()
+    val fv = reg.featureView(viewName)
     config.registryPath.flatMap { rp =>
-      StatsStore.read(spark, StatsStore.statsPath(rp, fv.name, resolveJoinKeys(fv)))
+      StatsStore.read(spark, StatsStore.statsPath(rp, fv.name, reg.joinKeys(fv)))
     }
   }
 
@@ -460,13 +466,6 @@ final class FeatureStore(
     catch { case _: org.apache.spark.sql.AnalysisException => empty() }
   }
 
-  private def resolveJoinKeys(fv: FeatureView): Seq[String] =
-    fv.entities.flatMap { e =>
-      registry.getEntity(e)
-        .map(_.resolvedJoinKeys)
-        .getOrElse(Seq(e)) // entity name doubles as join key if unregistered
-    }.distinct
-
   /** M4: point-in-time-correct enrichment of `entityDf` with
     * `"view:feature"` refs. Column names in the result are
     * `view__feature` when `fullFeatureNames` (Feast's
@@ -482,9 +481,9 @@ final class FeatureStore(
       fullFeatureNames: Boolean = true,
       cacheEntity: Boolean = true,
       coarseBucketSeconds: Option[Long] = None): RetrievalJob = {
-    val resolved = registry.resolve(features)
-    val requests = resolved.map { case (fv, feats) =>
-      PointInTimeJoin.ViewRequest(fv, feats, resolveJoinKeys(fv))
+    val reg = registry.snapshot()
+    val requests = reg.resolve(features).map { case (fv, feats) =>
+      PointInTimeJoin.ViewRequest(fv, feats, reg.joinKeys(fv))
     }
     // The facade owns the entity cache so RetrievalJob.release() can
     // unpersist it — PointInTimeJoin itself never persists (its
@@ -508,11 +507,13 @@ final class FeatureStore(
   }
 
   /** M5: latest-per-key within [start, end] → online store. */
-  def materialize(start: Timestamp, end: Timestamp, views: Seq[String]): Unit =
+  def materialize(start: Timestamp, end: Timestamp, views: Seq[String]): Unit = {
+    val reg = registry.snapshot()
     views.foreach { name =>
-      val fv = getFeatureView(name)
-      Materializer.materialize(spark, onlineStore, fv, resolveJoinKeys(fv), start, end)
+      val fv = reg.featureView(name)
+      Materializer.materialize(spark, onlineStore, fv, reg.joinKeys(fv), start, end)
     }
+  }
 
   /** M6: online lookup. Declared-FLOAT features narrow to float32 like
     * the reference's Redis round-trip (`explore_features.ipynb` cell 9:
@@ -521,10 +522,12 @@ final class FeatureStore(
   def getOnlineFeatures(
       entityRows: Seq[Map[String, Any]],
       features: Seq[String]): Seq[Map[String, Any]] = {
-    val resolved = registry.resolve(features)
+    val reg = registry.snapshot()
+    val resolved = reg.resolve(features).map { case (fv, feats) =>
+      (fv, feats, reg.joinKeys(fv))
+    }
     entityRows.map { row =>
-      resolved.flatMap { case (fv, feats) =>
-        val keys = resolveJoinKeys(fv)
+      resolved.flatMap { case (fv, feats, keys) =>
         val keyValues = keys.map(k => row.getOrElse(k,
           throw new IllegalArgumentException(s"entity row lacks join key '$k'")))
         val vector = onlineStore.get(fv.name, keyValues)

@@ -4,141 +4,67 @@ import org.json4s._
 import org.json4s.jackson.JsonMethods
 import org.apache.spark.sql.types.DataType
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.time.Instant
-import scala.collection.concurrent.TrieMap
-import scala.jdk.CollectionConverters._
 
 /** Central metadata registry: the rebuild of the reference's
   * `registry.db` blob (`CASE.MD:30,131-134`;
   * `station_reads_hourly_fs/feature_store.yaml:1-5`).
+  *
+  * One mechanism over two primitives: [[snapshot]] reads the whole
+  * document once, [[update]] does one read-modify-write of it. Every
+  * public method is a final method over those two, so a caller that
+  * needs several lookups (a feature-store call resolving refs and join
+  * keys) takes ONE snapshot and works from it — one read, one document
+  * version — instead of one read per lookup.
   *
   * `apply` is idempotent-upsert and stamps created/lastUpdated like the
   * reference (`CASE.MD:180-185,276-279`); `list*`/`get*` are the discovery
   * surface (`CASE.MD:234-240`).
   */
 trait Registry {
-  def applyEntity(e: Entity): Unit
-  def applyFeatureView(fv: FeatureView): Unit
-  def getEntity(name: String): Option[Entity]
-  def getFeatureView(name: String): Option[FeatureView]
-  def listEntities(): Seq[Entity]
-  def listFeatureViews(): Seq[FeatureView]
-  def listDataSources(): Seq[SparkSource] = listFeatureViews().map(_.source).distinct
+  import Registry._
 
-  /** Resolve `"view:feature"` refs, grouped by view in first-seen order. */
-  def resolve(refs: Seq[String]): Seq[(FeatureView, Seq[Feature])] = {
-    val parsed = refs.map(FeatureRef.parse)
-    parsed.map(_.view).distinct.map { viewName =>
-      val fv = getFeatureView(viewName).getOrElse(
-        throw new NoSuchElementException(s"feature view '$viewName' not registered"))
-      // duplicate refs (easy when concatenating ref lists) would emit
-      // duplicate identically-named output columns downstream —
-      // AMBIGUOUS_REFERENCE far from the cause; first occurrence wins
-      val wanted = parsed.filter(_.view == viewName).map(_.feature).distinct
-      val feats = wanted.map { f =>
-        fv.features.find(_.name == f).getOrElse(
-          throw new NoSuchElementException(s"feature '$f' not in view '$viewName'"))
-      }
-      (fv, feats)
-    }
-  }
+  /** The registry document as of now, read once. */
+  def snapshot(): State
+
+  /** One read-modify-write of the document. */
+  def update(f: State => State): Unit
+
+  final def applyEntity(e: Entity): Unit =
+    update(_.withEntity(e, Instant.now.toString))
+  final def applyFeatureView(fv: FeatureView): Unit =
+    update(_.withView(fv, Instant.now.toString))
+  final def getEntity(name: String): Option[Entity] = snapshot().entities.get(name)
+  final def getFeatureView(name: String): Option[FeatureView] = snapshot().views.get(name)
+  final def listEntities(): Seq[Entity] = snapshot().entities.values.toSeq.sortBy(_.name)
+  final def listFeatureViews(): Seq[FeatureView] = snapshot().views.values.toSeq.sortBy(_.name)
+  final def listDataSources(): Seq[SparkSource] = listFeatureViews().map(_.source).distinct
+  final def resolve(refs: Seq[String]): Seq[(FeatureView, Seq[Feature])] =
+    snapshot().resolve(refs)
+  final def meta(kind: String, name: String): Option[Meta] =
+    snapshot().meta.get(s"$kind/$name")
 }
 
 /** Volatile registry for tests and ephemeral sessions. */
 final class InMemoryRegistry extends Registry {
-  private val entities = TrieMap.empty[String, Entity]
-  private val views = TrieMap.empty[String, FeatureView]
-  override def applyEntity(e: Entity): Unit = entities.put(e.name, e)
-  override def applyFeatureView(fv: FeatureView): Unit = views.put(fv.name, fv)
-  override def getEntity(name: String): Option[Entity] = entities.get(name)
-  override def getFeatureView(name: String): Option[FeatureView] = views.get(name)
-  override def listEntities(): Seq[Entity] = entities.values.toSeq.sortBy(_.name)
-  override def listFeatureViews(): Seq[FeatureView] = views.values.toSeq.sortBy(_.name)
-}
-
-/** File-backed JSON registry. The whole registry is one small metadata
-  * document (like the reference's `registry.db` blob) — atomic
-  * write-via-rename, reread on each access so concurrent sessions observe
-  * upserts.
-  */
-final class FileRegistry(val path: Path) extends Registry {
-  import FileRegistry._
-
-  def this(path: String) = this(Paths.get(path))
-
-  private def load(): State =
-    if (Files.exists(path)) fromJson(new String(Files.readAllBytes(path), "UTF-8"))
-    else State(Map.empty, Map.empty, Map.empty)
-
-  private def save(s: State): Unit = {
-    // WRITER-UNIQUE tmp: a fixed shared tmp lets two concurrent writers
-    // in different JVMs (synchronized covers one JVM only; the class
-    // contract is last-writer-wins across sessions) publish a torn
-    // document — A renames B's half-written tmp into the final path
-    val tmp = path.resolveSibling(
-      path.getFileName.toString + ".tmp-" + java.util.UUID.randomUUID)
-    if (path.getParent != null) Files.createDirectories(path.getParent)
-    Files.write(tmp, toJson(s).getBytes("UTF-8"))
-    Files.move(tmp, path, StandardCopyOption.REPLACE_EXISTING,
-      StandardCopyOption.ATOMIC_MOVE)
-    // best-effort sweep of STALE tmps (crashed writers), mirroring
-    // HadoopRegistry.save: unique-named orphans would otherwise
-    // accumulate next to the registry forever. Age-filtered so a live
-    // concurrent writer's in-flight tmp survives — the horizon is
-    // MINUTES, not seconds: deleting a slow live writer's tmp
-    // mid-Files.write (slow NFS, large registry) would fail its
-    // ATOMIC_MOVE with NoSuchFileException, and orphan accumulation is
-    // not latency-sensitive (ADVICE r19).
-    try {
-      val dir = Option(path.getParent).getOrElse(Paths.get("."))
-      val prefix = path.getFileName.toString + ".tmp-"
-      val horizonMs = FileRegistry.sweepHorizonMs
-      val now = System.currentTimeMillis()
-      val st = Files.list(dir)
-      try st.iterator().asScala
-        .filter(_.getFileName.toString.startsWith(prefix))
-        .filter(p => now - Files.getLastModifiedTime(p).toMillis > horizonMs)
-        .foreach(p => Files.deleteIfExists(p))
-      finally st.close()
-    } catch { case scala.util.control.NonFatal(_) => () }
-  }
-
-  override def applyEntity(e: Entity): Unit = synchronized {
-    val s = load()
-    val now = Instant.now.toString
-    val meta = s.meta.getOrElse("entity/" + e.name, Meta(now, now)).copy(lastUpdated = now)
-    save(s.copy(entities = s.entities + (e.name -> e),
-      meta = s.meta + (("entity/" + e.name) -> meta)))
-  }
-
-  override def applyFeatureView(fv: FeatureView): Unit = synchronized {
-    val s = load()
-    val now = Instant.now.toString
-    val meta = s.meta.getOrElse("fv/" + fv.name, Meta(now, now)).copy(lastUpdated = now)
-    save(s.copy(views = s.views + (fv.name -> fv),
-      meta = s.meta + (("fv/" + fv.name) -> meta)))
-  }
-
-  override def getEntity(name: String): Option[Entity] = load().entities.get(name)
-  override def getFeatureView(name: String): Option[FeatureView] = load().views.get(name)
-  override def listEntities(): Seq[Entity] = load().entities.values.toSeq.sortBy(_.name)
-  override def listFeatureViews(): Seq[FeatureView] = load().views.values.toSeq.sortBy(_.name)
-
-  def meta(kind: String, name: String): Option[Meta] = load().meta.get(s"$kind/$name")
+  @volatile private var state = Registry.State(Map.empty, Map.empty, Map.empty)
+  override def snapshot(): Registry.State = state
+  override def update(f: Registry.State => Registry.State): Unit =
+    synchronized { state = f(state) }
 }
 
 /** Registry on any Hadoop filesystem (hdfs://, abfss://, s3a://, …) —
   * the cluster-ready analogue of the reference's `registry.db` blob on
-  * ADLS (`station_reads_hourly_fs/feature_store.yaml:1-5`). Same JSON
-  * document format as [[FileRegistry]]; writes go to a temp path then
-  * rename (atomic on HDFS/ABFS directories-as-objects semantics
-  * permitting; last-writer-wins like the reference).
+  * ADLS (`station_reads_hourly_fs/feature_store.yaml:1-5`), and the
+  * file-backed registry on a plain local path. The document is reread
+  * on every [[snapshot]], so concurrent sessions observe upserts; writes
+  * go to a temp path then rename (atomic on HDFS/ABFS directories-as-
+  * objects semantics permitting; last-writer-wins like the reference).
   */
 final class HadoopRegistry(
     pathStr: String,
     hadoopConf: org.apache.hadoop.conf.Configuration) extends Registry {
-  import FileRegistry._
+  import Registry._
   import org.apache.hadoop.fs.{FileSystem, Path}
 
   def this(spark: org.apache.spark.sql.SparkSession, path: String) =
@@ -319,35 +245,19 @@ final class HadoopRegistry(
       if (leftovers.nonEmpty) {
         val now = fsNow(f)
         leftovers
-          .filter(st => now - st.getModificationTime > FileRegistry.sweepHorizonMs)
+          .filter(st => now - st.getModificationTime > Registry.sweepHorizonMs)
           .foreach(st => f.delete(st.getPath, false))
       }
     } catch { case scala.util.control.NonFatal(_) => () }
   }
 
-  override def applyEntity(e: Entity): Unit = synchronized {
-    val s = loadForUpdate()
-    val now = java.time.Instant.now.toString
-    val meta = s.meta.getOrElse("entity/" + e.name, Meta(now, now)).copy(lastUpdated = now)
-    save(s.copy(entities = s.entities + (e.name -> e),
-      meta = s.meta + (("entity/" + e.name) -> meta)))
-  }
+  override def snapshot(): State = load()
 
-  override def applyFeatureView(fv: FeatureView): Unit = synchronized {
-    val s = loadForUpdate()
-    val now = java.time.Instant.now.toString
-    val meta = s.meta.getOrElse("fv/" + fv.name, Meta(now, now)).copy(lastUpdated = now)
-    save(s.copy(views = s.views + (fv.name -> fv),
-      meta = s.meta + (("fv/" + fv.name) -> meta)))
-  }
-
-  override def getEntity(name: String): Option[Entity] = load().entities.get(name)
-  override def getFeatureView(name: String): Option[FeatureView] = load().views.get(name)
-  override def listEntities(): Seq[Entity] = load().entities.values.toSeq.sortBy(_.name)
-  override def listFeatureViews(): Seq[FeatureView] = load().views.values.toSeq.sortBy(_.name)
+  override def update(f: State => State): Unit =
+    synchronized { save(f(loadForUpdate())) }
 }
 
-object FileRegistry {
+object Registry {
   /** Age beyond which an orphan writer tmp is deleted by the save-time
     * sweep. Minutes, not seconds: a live concurrent writer's in-flight
     * tmp must survive even a pathologically slow write (slow NFS, very
@@ -361,7 +271,45 @@ object FileRegistry {
   final case class State(
       entities: Map[String, Entity],
       views: Map[String, FeatureView],
-      meta: Map[String, Meta])
+      meta: Map[String, Meta]) {
+
+    def featureView(name: String): FeatureView = views.getOrElse(name,
+      throw new NoSuchElementException(s"feature view '$name' not registered"))
+
+    /** The view's join keys, in entity order; an unregistered entity's
+      * name doubles as its join key.
+      */
+    def joinKeys(fv: FeatureView): Seq[String] =
+      fv.entities.flatMap { e =>
+        entities.get(e).map(_.resolvedJoinKeys).getOrElse(Seq(e))
+      }.distinct
+
+    /** Resolve `"view:feature"` refs, grouped by view in first-seen order. */
+    def resolve(refs: Seq[String]): Seq[(FeatureView, Seq[Feature])] = {
+      val parsed = refs.map(FeatureRef.parse)
+      parsed.map(_.view).distinct.map { viewName =>
+        val fv = featureView(viewName)
+        // duplicate refs (easy when concatenating ref lists) would emit
+        // duplicate identically-named output columns downstream —
+        // AMBIGUOUS_REFERENCE far from the cause; first occurrence wins
+        val wanted = parsed.filter(_.view == viewName).map(_.feature).distinct
+        val feats = wanted.map { f =>
+          fv.features.find(_.name == f).getOrElse(
+            throw new NoSuchElementException(s"feature '$f' not in view '$viewName'"))
+        }
+        (fv, feats)
+      }
+    }
+
+    def withEntity(e: Entity, now: String): State =
+      copy(entities = entities + (e.name -> e), meta = stamped("entity/" + e.name, now))
+    def withView(fv: FeatureView, now: String): State =
+      copy(views = views + (fv.name -> fv), meta = stamped("fv/" + fv.name, now))
+
+    /** `created` is kept from the first apply, `lastUpdated` bumped. */
+    private def stamped(key: String, now: String): Map[String, Meta] =
+      meta + (key -> meta.getOrElse(key, Meta(now, now)).copy(lastUpdated = now))
+  }
 
   // json4s serialization with DataType <-> DDL-string mapping.
   private object DataTypeSerializer extends CustomSerializer[DataType](_ => (

@@ -54,7 +54,9 @@ object Materializer {
   }
 
   /** @return the materialized latest-vector DataFrame (keys, event ts,
-    *         features) — also written to `store`.
+    *         features) — also upserted into `store`: keys absent from
+    *         the window keep their vectors, so incremental windows
+    *         accumulate on whole-table stores too.
     */
   def materialize(
       spark: SparkSession,
@@ -64,7 +66,7 @@ object Materializer {
       start: Timestamp,
       end: Timestamp): DataFrame = {
     val out = latestInWindow(spark, view, joinKeys, start, end)
-    store.write(view.name, joinKeys, out)
+    store.upsert(view.name, joinKeys, out)
     out
   }
 

@@ -24,6 +24,14 @@ object SparkSpec {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
+    // WindowExec warns "No Partition Defined" for every unpartitioned
+    // window; the drift readouts run those on purpose over a 16-row
+    // bucket grid, and thousands of such lines bury real warnings.
+    // PlanSpec's unpartitionedWindows pins are what catch an unintended
+    // unpartitioned window, not this log line.
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
     s
   }
 }

@@ -91,7 +91,7 @@ class CodebookStoreSpec extends SparkSpec {
     val repo = java.nio.file.Files.createTempDirectory("cb_repo")
     val regPath = repo.resolve("registry.json").toString
     val fs = new FeatureStore(spark,
-      RepoConfig("cb_demo", Some(regPath)), new FileRegistry(regPath))
+      RepoConfig("cb_demo", Some(regPath)), new HadoopRegistry(spark, regPath))
     fs.applyObjects(Seq(
       Entity("vec", Seq("vec_id"), ValueType.INT64),
       FeatureView("emb_fv", Seq("vec"),
@@ -115,7 +115,7 @@ class CodebookStoreSpec extends SparkSpec {
     val repo = java.nio.file.Files.createTempDirectory("idx_repo")
     val regPath = repo.resolve("registry.json").toString
     val fs = new FeatureStore(spark,
-      RepoConfig("idx_demo", Some(regPath)), new FileRegistry(regPath))
+      RepoConfig("idx_demo", Some(regPath)), new HadoopRegistry(spark, regPath))
     fs.applyObjects(Seq(
       Entity("vec", Seq("vec_id"), ValueType.INT64),
       FeatureView("emb_fv", Seq("vec"),
@@ -168,7 +168,7 @@ class CodebookStoreSpec extends SparkSpec {
     val repo = java.nio.file.Files.createTempDirectory("health_repo")
     val regPath = repo.resolve("registry.json").toString
     val fs = new FeatureStore(spark,
-      RepoConfig("health_demo", Some(regPath)), new FileRegistry(regPath))
+      RepoConfig("health_demo", Some(regPath)), new HadoopRegistry(spark, regPath))
     fs.applyObjects(Seq(
       Entity("vec", Seq("vec_id"), ValueType.INT64),
       FeatureView("emb_fv", Seq("vec"),
@@ -260,7 +260,7 @@ class CodebookStoreSpec extends SparkSpec {
     val repo = java.nio.file.Files.createTempDirectory("lifecycle_repo")
     val regPath = repo.resolve("registry.json").toString
     val fs = new FeatureStore(spark,
-      RepoConfig("lc_demo", Some(regPath)), new FileRegistry(regPath))
+      RepoConfig("lc_demo", Some(regPath)), new HadoopRegistry(spark, regPath))
     fs.applyObjects(Seq(
       Entity("vec", Seq("vec_id"), ValueType.INT64),
       FeatureView("emb_fv", Seq("vec"),
@@ -341,7 +341,7 @@ class CodebookStoreSpec extends SparkSpec {
     val repo = java.nio.file.Files.createTempDirectory("geom_repo")
     val regPath = repo.resolve("registry.json").toString
     val fs = new FeatureStore(spark,
-      RepoConfig("geom_demo", Some(regPath)), new FileRegistry(regPath))
+      RepoConfig("geom_demo", Some(regPath)), new HadoopRegistry(spark, regPath))
     fs.applyObjects(Seq(
       Entity("vec", Seq("vec_id"), ValueType.INT64),
       FeatureView("emb_fv", Seq("vec"),

@@ -18,29 +18,23 @@ class RegistrySpec extends AnyFunSuite {
     SparkSource("gold", "/tmp/gold", "parquet", "event_timestamp", Some("created")),
     Some(Duration.ofSeconds(172800)))
 
-  test("file registry persists and reloads definitions faithfully") {
-    val path = Files.createTempDirectory("reg").resolve("registry.json")
-    val reg = new FileRegistry(path)
-    reg.applyEntity(entity)
-    reg.applyFeatureView(view)
-    val reloaded = new FileRegistry(path) // fresh instance, re-reads file
-    assert(reloaded.getEntity("driver") === Some(entity))
-    assert(reloaded.getFeatureView("taxi_hourly") === Some(view))
-    assert(reloaded.listDataSources() === Seq(view.source))
-  }
-
-  test("file registry save sweeps STALE writer tmps but spares live ones") {
+  test("hadoop-fs registry save sweeps STALE writer tmps but spares live ones") {
     // crashed writers leave unique-named `.tmp-<uuid>` orphans that
     // would otherwise accumulate next to the registry forever; a LIVE
     // concurrent writer's young tmp must survive the sweep
     val dir = Files.createTempDirectory("regsweep")
     val path = dir.resolve("registry.json")
+    // publish the registry BEFORE planting the young tmps: with the
+    // final path missing, a fresh tmp reads as a swap in flight and the
+    // load waits it out
+    val reg = new HadoopRegistry(path.toString, new org.apache.hadoop.conf.Configuration())
+    reg.applyEntity(entity)
     val stale = dir.resolve("registry.json.tmp-dead-writer")
     val live = dir.resolve("registry.json.tmp-live-writer")
     Files.writeString(stale, "{}")
     Files.setLastModifiedTime(stale,
       java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - FileRegistry.sweepHorizonMs - 60000L))
+        System.currentTimeMillis() - Registry.sweepHorizonMs - 60000L))
     Files.writeString(live, "{}")
     // "live" includes SLOW: a tmp older than the read-side staleness
     // horizon but younger than the sweep horizon is a writer that is
@@ -51,7 +45,7 @@ class RegistrySpec extends AnyFunSuite {
     Files.setLastModifiedTime(slow,
       java.nio.file.attribute.FileTime.fromMillis(
         System.currentTimeMillis() - 60000L))
-    new FileRegistry(path).applyEntity(entity)
+    reg.applyEntity(entity)
     assert(!Files.exists(stale), "stale orphan tmp must be swept")
     assert(Files.exists(live), "a live writer's young tmp must survive")
     assert(Files.exists(slow), "a slow live writer's tmp must survive the sweep")
@@ -59,8 +53,8 @@ class RegistrySpec extends AnyFunSuite {
   }
 
   test("apply is idempotent and preserves created while bumping lastUpdated") {
-    val path = Files.createTempDirectory("reg").resolve("registry.json")
-    val reg = new FileRegistry(path)
+    val path = Files.createTempDirectory("reg").resolve("registry.json").toString
+    val reg = new HadoopRegistry(path, new org.apache.hadoop.conf.Configuration())
     reg.applyEntity(entity)
     val m1 = reg.meta("entity", "driver").get
     Thread.sleep(5)
@@ -98,6 +92,67 @@ class RegistrySpec extends AnyFunSuite {
     assert(reloaded.getEntity("driver") === Some(entity))
     assert(reloaded.getFeatureView("taxi_hourly") === Some(view))
     assert(reloaded.listFeatureViews().map(_.name) === Seq("taxi_hourly"))
+    assert(reloaded.listDataSources() === Seq(view.source))
+  }
+
+  test("hadoop-fs registry loads a registry.json in the established document format") {
+    // pins the on-disk format: registry.json files already written by
+    // earlier versions must keep loading unchanged
+    val dir = Files.createTempDirectory("hreg_fmt")
+    Files.writeString(dir.resolve("registry.json"),
+      """{
+        |  "entities" : {
+        |    "driver" : {
+        |      "name" : "driver",
+        |      "joinKeys" : [ "taxi_id" ],
+        |      "valueType" : "STRING",
+        |      "description" : "a driver"
+        |    }
+        |  },
+        |  "views" : {
+        |    "taxi_hourly" : {
+        |      "name" : "taxi_hourly",
+        |      "entities" : [ "driver" ],
+        |      "features" : [ {
+        |        "name" : "avg_fare",
+        |        "dtype" : "double"
+        |      }, {
+        |        "name" : "flag",
+        |        "dtype" : "string"
+        |      } ],
+        |      "source" : {
+        |        "name" : "gold",
+        |        "path" : "/tmp/gold",
+        |        "fileFormat" : "parquet",
+        |        "timestampField" : "event_timestamp",
+        |        "createdTimestampColumn" : "created",
+        |        "options" : { }
+        |      },
+        |      "ttl" : "PT48H"
+        |    }
+        |  },
+        |  "meta" : {
+        |    "entity/driver" : {
+        |      "created" : "2026-10-19T15:56:01.805235194Z",
+        |      "lastUpdated" : "2026-10-19T15:56:01.805235194Z"
+        |    },
+        |    "fv/taxi_hourly" : {
+        |      "created" : "2026-10-19T15:56:02.573935888Z",
+        |      "lastUpdated" : "2026-10-19T15:56:02.573935888Z"
+        |    }
+        |  }
+        |}""".stripMargin)
+    val reg = new HadoopRegistry(dir.resolve("registry.json").toString,
+      new org.apache.hadoop.conf.Configuration())
+    assert(reg.getEntity("driver") === Some(entity.copy(description = "a driver")))
+    assert(reg.getFeatureView("taxi_hourly") === Some(view))
+    assert(reg.meta("fv", "taxi_hourly") === Some(Registry.Meta(
+      "2026-10-19T15:56:02.573935888Z", "2026-10-19T15:56:02.573935888Z")))
+    // and it writes back in the same format: the re-apply keeps created
+    reg.applyEntity(entity)
+    assert(reg.meta("entity", "driver").get.created === "2026-10-19T15:56:01.805235194Z")
+    assert(Registry.fromJson(Files.readString(dir.resolve("registry.json"))).views ===
+      Map("taxi_hourly" -> view))
   }
 
   test("hadoop-fs registry works over a non-local URI scheme (S8)") {

@@ -15,7 +15,7 @@ class StatsStoreSpec extends SparkSpec {
     val repo = java.nio.file.Files.createTempDirectory("stats_repo")
     val regPath = repo.resolve("registry.json").toString
     val fs = new FeatureStore(spark,
-      RepoConfig("stats_demo", Some(regPath)), new FileRegistry(regPath))
+      RepoConfig("stats_demo", Some(regPath)), new HadoopRegistry(spark, regPath))
     fs.applyObjects(Seq(
       Entity("user", Seq("user_id"), ValueType.INT64),
       FeatureView("events_fv", Seq("user"),
@@ -65,7 +65,7 @@ class StatsStoreSpec extends SparkSpec {
     val repo = java.nio.file.Files.createTempDirectory("stats_repo_dim")
     val regPath = repo.resolve("registry.json").toString
     val fs = new FeatureStore(spark,
-      RepoConfig("dim_demo", Some(regPath)), new FileRegistry(regPath))
+      RepoConfig("dim_demo", Some(regPath)), new HadoopRegistry(spark, regPath))
     fs.applyObjects(Seq(
       Entity("reg", Seq("r_regionkey"), ValueType.INT64),
       FeatureView("region_fv", Seq("reg"),

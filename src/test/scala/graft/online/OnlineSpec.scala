@@ -66,12 +66,23 @@ class OnlineSpec extends SparkSpec {
   }
 
   test("materialize re-run overwrites with newer window (upsert)") {
-    val store = new InMemoryOnlineStore
-    val fs = fixture(store)
-    fs.materialize(
-      Timestamp.valueOf("2024-01-01 00:00:00"),
-      Timestamp.valueOf("2024-03-01 00:00:00"), Seq("fv"))
-    assert(lookupValue(fs, "a") === Some(99.0))
+    val stores = Seq(new InMemoryOnlineStore,
+      new ParquetOnlineStore(spark, Files.createTempDirectory("graft_kv_up").toString))
+    stores.foreach { store =>
+      val fs = fixture(store)
+      fs.materialize(
+        Timestamp.valueOf("2024-01-01 00:00:00"),
+        Timestamp.valueOf("2024-03-01 00:00:00"), Seq("fv"))
+      assert(lookupValue(fs, "a") === Some(99.0))
+      // a window without key b rewrites a (unconditionally: its latest
+      // in this window is 5.0) and leaves b's vector alone, on the
+      // whole-table parquet store as on the per-key memory store
+      fs.materialize(
+        Timestamp.valueOf("2024-01-04 00:00:00"),
+        Timestamp.valueOf("2024-01-31 00:00:00"), Seq("fv"))
+      assert(lookupValue(fs, "a") === Some(5.0), store.getClass.getSimpleName)
+      assert(lookupValue(fs, "b") === Some(3.0), store.getClass.getSimpleName)
+    }
   }
 
   test("kv-client store writes executor-parallel and serves the full loop") {
