@@ -18,6 +18,20 @@ class RegistrySpec extends AnyFunSuite {
     SparkSource("gold", "/tmp/gold", "parquet", "event_timestamp", Some("created")),
     Some(Duration.ofSeconds(172800)))
 
+  test("file registry persists and reloads definitions faithfully") {
+    // a registry backed by a plain local file path (no URI scheme): a
+    // fresh instance re-reads the file and sees every definition
+    val path = Files.createTempDirectory("reg").resolve("registry.json")
+    val reg = new HadoopRegistry(path.toString, new org.apache.hadoop.conf.Configuration())
+    reg.applyEntity(entity)
+    reg.applyFeatureView(view)
+    assert(Files.exists(path), "apply must publish registry.json at the given path")
+    val reloaded = new HadoopRegistry(path.toString, new org.apache.hadoop.conf.Configuration())
+    assert(reloaded.getEntity("driver") === Some(entity))
+    assert(reloaded.getFeatureView("taxi_hourly") === Some(view))
+    assert(reloaded.listDataSources() === Seq(view.source))
+  }
+
   test("hadoop-fs registry save sweeps STALE writer tmps but spares live ones") {
     // crashed writers leave unique-named `.tmp-<uuid>` orphans that
     // would otherwise accumulate next to the registry forever; a LIVE
