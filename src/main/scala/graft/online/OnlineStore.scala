@@ -157,9 +157,7 @@ final class ParquetOnlineStore(spark: SparkSession, root: String,
 
   private def load(view: String): Map[String, Map[String, Any]] =
     cache.getOrElseUpdate(view, {
-      val keys = keyCols.getOrElseUpdate(view,
-        spark.read.parquet(path(view) + "__keys")
-          .collect().map(_.getString(0)).toSeq)
+      val keys = keyCols.getOrElseUpdate(view, readKeys(view))
       val df = spark.read.parquet(path(view))
       val n = df.count()
       require(n <= maxLoadRows,
@@ -205,10 +203,20 @@ final class ParquetOnlineStore(spark: SparkSession, root: String,
       require(hfs.rename(old0, fsPath),
         s"upsert: failed to restore interrupted view from $old0")
     if (!hfs.exists(fsPath)) { write(view, keyColumns, df); return }
-    val merged = spark.read.parquet(p)
+    // Rows keyed by other join keys (the view was re-applied with new
+    // ones) cannot be merged: the batch replaces the table.
+    if (!hfs.exists(new org.apache.hadoop.fs.Path(p + "__keys")) ||
+        readKeys(view) != keyColumns) { write(view, keyColumns, df); return }
+    // Kept rows take the batch's schema: a feature the view dropped is
+    // dropped, one it added serves null (as on the memory store), and
+    // a retyped feature is cast to its new type.
+    val stored = spark.read.parquet(p)
+    val kept = stored
       .join(df.select(keyColumns.map(org.apache.spark.sql.functions.col): _*),
         keyColumns, "left_anti")
-      .unionByName(df)
+      .select(df.schema.fields.filter(f => stored.columns.contains(f.name))
+        .map(f => org.apache.spark.sql.functions.col(f.name).cast(f.dataType)): _*)
+    val merged = kept.unionByName(df, allowMissingColumns = true)
     val tmp = new org.apache.hadoop.fs.Path(p + "__upsert")
     val old = new org.apache.hadoop.fs.Path(p + "__preupsert")
     merged.write.mode("overwrite").parquet(tmp.toString)
@@ -221,6 +229,9 @@ final class ParquetOnlineStore(spark: SparkSession, root: String,
     hfs.delete(old, true)
     writeKeyMeta(view, keyColumns)
   }
+
+  private def readKeys(view: String): Seq[String] =
+    spark.read.parquet(path(view) + "__keys").collect().map(_.getString(0)).toSeq
 
   private def writeKeyMeta(view: String, keyColumns: Seq[String]): Unit = {
     import spark.implicits._

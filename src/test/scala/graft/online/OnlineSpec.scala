@@ -4,7 +4,7 @@ import graft.SparkSpec
 import graft.api.{FeatureStore, RepoConfig}
 import graft.core._
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.types.{DoubleType, LongType}
 
 import java.nio.file.Files
 import java.sql.Timestamp
@@ -83,6 +83,47 @@ class OnlineSpec extends SparkSpec {
       assert(lookupValue(fs, "a") === Some(5.0), store.getClass.getSimpleName)
       assert(lookupValue(fs, "b") === Some(3.0), store.getClass.getSimpleName)
     }
+  }
+
+  test("parquet store materialize follows a view re-applied with other features or keys") {
+    val src = Files.createTempDirectory("graft_online_evo").toString + "/f"
+    Seq(
+      ("a", "g1", "2024-01-05 00:00:00", 5.0, 50L),
+      ("b", "g2", "2024-01-03 00:00:00", 3.0, 30L)
+    ).toDF("key", "grp", "s", "value", "count")
+      .select(col("key"), col("grp"), to_timestamp(col("s")).as("event_ts"),
+        col("value"), col("count"))
+      .write.mode("overwrite").parquet(src)
+    def view(keys: Seq[String], feats: Feature*) =
+      FeatureView("fv", keys, feats, SparkSource("s", src, timestampField = "event_ts"))
+    val fs = new FeatureStore(spark, RepoConfig("t"), new InMemoryRegistry,
+      new ParquetOnlineStore(spark, Files.createTempDirectory("graft_kv_evo").toString))
+    def materialize(from: String): Unit = fs.materialize(
+      Timestamp.valueOf(from), Timestamp.valueOf("2024-01-31 00:00:00"), Seq("fv"))
+    def served(row: Map[String, Any], feature: String): Option[Any] =
+      fs.getOnlineFeatures(Seq(row), Seq(s"fv:$feature"))
+        .head.get(s"fv__$feature").filter(_ != null)
+
+    fs.applyObjects(Seq(Entity("key", Seq("key"), ValueType.STRING),
+      view(Seq("key"), Feature("value", DoubleType))))
+    materialize("2024-01-01 00:00:00")
+    // a second session adds a feature; the next window holds only key a
+    fs.applyObjects(Seq(view(Seq("key"), Feature("value", DoubleType),
+      Feature("count", LongType))))
+    materialize("2024-01-04 00:00:00")
+    assert(served(Map("key" -> "a"), "count") === Some(50L))
+    assert(served(Map("key" -> "b"), "value") === Some(3.0), "key outside the window kept")
+    assert(served(Map("key" -> "b"), "count") === None)
+    // dropping a feature keeps the rest of the kept keys' vectors
+    fs.applyObjects(Seq(view(Seq("key"), Feature("value", DoubleType))))
+    materialize("2024-01-04 00:00:00")
+    assert(served(Map("key" -> "a"), "value") === Some(5.0))
+    assert(served(Map("key" -> "b"), "value") === Some(3.0), "key outside the window kept")
+    // other join keys: the window replaces the table
+    fs.applyObjects(Seq(view(Seq("grp"), Feature("value", DoubleType))))
+    materialize("2024-01-01 00:00:00")
+    assert(served(Map("grp" -> "g2"), "value") === Some(3.0))
+    assert(served(Map("grp" -> "g1"), "value") === Some(5.0))
   }
 
   test("kv-client store writes executor-parallel and serves the full loop") {
