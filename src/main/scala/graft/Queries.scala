@@ -211,9 +211,10 @@ object Queries {
     * with DIFFERENT join keys and DIFFERENT TTLs — `events_fv` on
     * `user_id` (7-day TTL, 2024 events) and `orders_fv` on `o_custkey`
     * (9000-day TTL reaching back to the 1995-2001 order history). The
-    * entity grid carries both keys; each view folds in with its own
-    * as-of window and its own LEFT join, and the per-view column
-    * prefixes keep colliding feature names apart. Oracle: two
+    * entity grid carries both keys; each key group is its own sorted
+    * scan with its own as-of window, the second chained on the first's
+    * output, and the per-view column prefixes keep colliding feature
+    * names apart. Oracle: two
     * independent ranked-CTE chains + two LEFT JOINs (the
     * `CASE.MD:339-501` template).
     */
@@ -287,25 +288,17 @@ object Queries {
       |LEFT JOIN cleaned_o co
       |  ON co.o_custkey = e.o_custkey AND co.event_timestamp = e.event_timestamp""".stripMargin
 
-  /** q06d: multi-view PIT with the COARSE-BUCKET valve engaged
-    * (VERDICT r11 #7 / r12 #6) — the flagship's hardest shape in its
-    * scale posture: ONE `getHistoricalFeatures` call folding a
-    * TTL-LESS view (`events_fv`, unbounded history — the case whose
-    * naive join output is |history per key| × |cutoffs per key|)
-    * together with a TTL'd view (`orders_fv`, 9000 days). With
-    * `coarseBucketSeconds = 86400`, the TTL-less view's feature side
-    * PRE-REDUCES to latest-per-(key, day-bucket) BEFORE its join
-    * (full earlier buckets join reduced rows; only the cutoff's own
-    * partial bucket joins raw rows), while the TTL'd view rides the
-    * bounded path in the same fold. The ORACLE is the NAIVE
-    * formulation — no bucket anywhere, the events leg joining ALL
-    * eligible history — so the hash gate is the machine-checked proof
-    * that the bucketed full∪partial union loses nothing inside the
-    * composed multi-view fold (the q236-style losslessness
-    * convention); PlanSpec pins that the pre-reduce aggregate sits
-    * UNDER the join in the physical plan.
+  /** q06d: multi-view PIT with a TTL-LESS view — the flagship's
+    * hardest shape: ONE `getHistoricalFeatures` call over `events_fv`
+    * with no TTL (unbounded history: a join-based as-of retrieval
+    * matches |history per key| × |cutoffs per key| rows) and the TTL'd
+    * `orders_fv` (9000 days). In the sorted scan a TTL-less view costs
+    * what a TTL'd one does: each history row passes once through its
+    * key's sort. The query keeps the name it had when it exercised the
+    * retired coarse-bucket pre-reduction. The ORACLE is the naive
+    * formulation — the events leg joins ALL eligible history.
     */
-  def pitMultiViewCoarse(s: SparkSession, dir: String): DataFrame = {
+  def pitMultiViewTtlLess(s: SparkSession, dir: String): DataFrame = {
     val fs = new FeatureStore(s, RepoConfig("graft_demo"), new InMemoryRegistry)
     fs.applyObjects(Seq(
       Entity("user", Seq("user_id"), ValueType.INT64),
@@ -328,11 +321,10 @@ object Queries {
       .withColumn("o_custkey", col("user_id"))
     fs.getHistoricalFeatures(entity,
       Seq("events_fv:value", "events_fv:event_type",
-        "orders_fv:o_totalprice", "orders_fv:o_orderstatus"),
-      coarseBucketSeconds = Some(86400L)).toDf
+        "orders_fv:o_totalprice", "orders_fv:o_orderstatus")).toDf
   }
 
-  val pitMultiViewCoarseSql: String =
+  val pitMultiViewTtlLessSql: String =
     """WITH entity AS (
       |  SELECT user_id, user_id AS o_custkey, event_timestamp
       |  FROM (SELECT DISTINCT user_id FROM events)
@@ -705,8 +697,7 @@ object Queries {
     * corpus size) for the gap flags + running sum, then a keyed agg; no
     * global sort. A pathological single-user firehose would bound-break
     * the window partition; the valve is pre-splitting such users by a
-    * coarse time bucket before sessionizing (same pattern as the PIT
-    * coarse-bucket valve).
+    * coarse time bucket before sessionizing.
     */
   def sessionize(s: SparkSession, dir: String): DataFrame =
     Transforms.sessionize(
@@ -5617,7 +5608,7 @@ object Queries {
     "q06_pit_join" -> pitJoin _,
     "q06b_pit_dense" -> pitDense _,
     "q06c_pit_multiview" -> pitMultiView _,
-    "q06d_pit_multiview_coarse" -> pitMultiViewCoarse _,
+    "q06d_pit_multiview_coarse" -> pitMultiViewTtlLess _,
     "q07_materialize_latest" -> materializeLatest _,
     "q08_distinct" -> distinctPairs _,
     "q09_collect_set" -> collectSet _,
@@ -5735,7 +5726,7 @@ object Queries {
     "q06_pit_join" -> pitJoinSql,
     "q06b_pit_dense" -> pitDenseSql,
     "q06c_pit_multiview" -> pitMultiViewSql,
-    "q06d_pit_multiview_coarse" -> pitMultiViewCoarseSql,
+    "q06d_pit_multiview_coarse" -> pitMultiViewTtlLessSql,
     "q07_materialize_latest" -> materializeLatestSql,
     "q08_distinct" -> distinctPairsSql,
     "q09_collect_set" -> collectSetSql,

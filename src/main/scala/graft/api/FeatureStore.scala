@@ -467,20 +467,16 @@ final class FeatureStore(
   }
 
   /** M4: point-in-time-correct enrichment of `entityDf` with
-    * `"view:feature"` refs. Column names in the result are
-    * `view__feature` when `fullFeatureNames` (Feast's
+    * `"view:feature"` refs (see [[PointInTimeJoin.retrieve]]: one sorted
+    * scan per group of views sharing join keys). Column names in the
+    * result are `view__feature` when `fullFeatureNames` (Feast's
     * full_feature_names=True), else bare feature names.
-    */
-  /** `coarseBucketSeconds`: opt-in pre-reduction granularity for
-    * TTL-less views (see [[PointInTimeJoin.retrieve]]) — bounds the
-    * as-of join against unbounded feature history at scale.
     */
   def getHistoricalFeatures(
       entityDf: DataFrame,
       features: Seq[String],
       fullFeatureNames: Boolean = true,
-      cacheEntity: Boolean = true,
-      coarseBucketSeconds: Option[Long] = None): RetrievalJob = {
+      cacheEntity: Boolean = true): RetrievalJob = {
     val reg = registry.snapshot()
     val requests = reg.resolve(features).map { case (fv, feats) =>
       PointInTimeJoin.ViewRequest(fv, feats, reg.joinKeys(fv))
@@ -501,8 +497,7 @@ final class FeatureStore(
         spark, persisted.getOrElse(entityDf), requests,
         entityTsCol = config.entityTimestampColumn,
         fullFeatureNames = fullFeatureNames,
-        cacheEntity = false,
-        coarseBucketSeconds = coarseBucketSeconds),
+        cacheEntity = false),
       () => persisted.foreach(_.unpersist(false)))
   }
 

@@ -6,8 +6,8 @@ import org.apache.spark.sql.functions._
 
 /** A/B of the two PIT formulations on the dense workload:
   *
-  *   - `argmax` (graft's): join + `max(struct(ts, features))` groupBy —
-  *     one shuffle for the join, one (ObjectHash/Sort) aggregate;
+  *   - `scan` (graft's): entity and feature rows unioned, one keyed
+  *     exchange, one sorted running-`last` window;
   *   - `window` (the reference's generated-SQL shape): join +
   *     ROW_NUMBER window + rn=1 filter + join-back.
   *
@@ -47,11 +47,10 @@ object PitStrategies {
   }
 
   /** The A/B body, session-agnostic so the spec suite can smoke it at
-    * sf0.001 (ExamplesSmokeSpec) — the equivalence requires inside are
-    * the pin; returns (strategy diff rows, coarse-vs-direct diff rows),
-    * both 0 on success.
+    * sf0.001 (ExamplesSmokeSpec) — the equivalence require inside is
+    * the pin; returns the strategy diff rows, 0 on success.
     */
-  def run(spark: SparkSession, dir: String): (Long, Long) = {
+  def run(spark: SparkSession, dir: String): Long = {
     def time(name: String)(f: => DataFrame): DataFrame = {
       val df = f
       df.count() // warm plan
@@ -61,40 +60,12 @@ object PitStrategies {
       df
     }
 
-    val argmax = time("argmax  (graft)")(graft.Queries.pitDense(spark, dir))
+    val scan = time("scan    (graft)")(graft.Queries.pitDense(spark, dir))
     val window = time("window  (reference shape)")(windowPit(spark, dir))
 
-    val diff = argmax.exceptAll(window).count() + window.exceptAll(argmax).count()
+    val diff = scan.exceptAll(window).count() + window.exceptAll(scan).count()
     println(s"result diff rows: $diff")
     require(diff == 0, "strategies disagree!")
-
-    // TTL-less dense retrieval: direct as-of (history × cutoffs blow-up
-    // risk) vs the coarse-bucket pre-reduction (bounded).
-    def ttlLess(coarse: Option[Long]): graft.api.RetrievalJob = {
-      import graft.core._
-      val fs = new graft.api.FeatureStore(
-        spark, graft.api.RepoConfig("demo"), new InMemoryRegistry)
-      fs.applyObjects(Seq(
-        Entity("user", Seq("user_id"), ValueType.INT64),
-        FeatureView("events_fv", Seq("user"),
-          Seq(Feature("value", org.apache.spark.sql.types.DoubleType)),
-          SparkSource("events_src", s"$dir/events.parquet",
-            timestampField = "ts",
-            options = Map(graft.sources.SourceReader.NanosColumnsOption -> "ts")))))
-      val entity = graft.Tables.load(spark, dir, "events")
-        .select(col("user_id"), col("ts").as("event_timestamp")).distinct()
-      fs.getHistoricalFeatures(entity, Seq("events_fv:value"),
-        coarseBucketSeconds = coarse)
-    }
-    val directJob = ttlLess(None)
-    val coarseJob = ttlLess(Some(86400L))
-    val direct = time("ttl-less direct        ")(directJob.toDf)
-    val coarse = time("ttl-less coarse-bucket ")(coarseJob.toDf)
-    val cdiff = direct.exceptAll(coarse).count() + coarse.exceptAll(direct).count()
-    println(s"coarse-vs-direct diff rows: $cdiff")
-    require(cdiff == 0, "coarse path disagrees!")
-    directJob.release()
-    coarseJob.release()
-    (diff, cdiff)
+    diff
   }
 }

@@ -3,7 +3,9 @@ package graft.offline
 import graft.core.{Feature, FeatureView}
 import graft.sources.SourceReader
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DataType
 
 /** Point-in-time-correct (as-of) historical retrieval — the defining
   * operator of the system (reference `CASE.MD:337-501`, the Feast
@@ -11,34 +13,54 @@ import org.apache.spark.sql.functions._
   * `Untitled.ipynb:682-868`).
   *
   * Semantics reproduced from the reference SQL:
-  *   - J1 base join: feature rows with `feature.ts <= entity.ts`, equi on
-  *     join keys, plus TTL lower bound `feature.ts >= entity.ts - ttl`
-  *     when ttl > 0 (`CASE.MD:385-386,407-422`);
-  *   - global upper-bound pre-filter `WHERE ts <= max(entity.ts)` pushed
-  *     into the feature scan (`CASE.MD:394-405`) so parquet row-group
-  *     stats / partition pruning bound the read;
-  *   - A6 entity dedup (`GROUP BY join_key, ts`, `CASE.MD:365-375`);
-  *   - A7 + W1 latest-row selection: MAX(created) dedup then
-  *     `ROW_NUMBER() OVER (... ORDER BY event_ts DESC, created DESC)`
+  *   - J1 as-of match: feature rows with `feature.ts <= entity.ts`, equal
+  *     on the view's join keys, plus the TTL lower bound
+  *     `feature.ts >= entity.ts - ttl` when a TTL is set
+  *     (`CASE.MD:385-386,407-422`);
+  *   - the global upper-bound pre-filter `WHERE ts <= max(entity.ts)`
+  *     pushed into the feature scan (`CASE.MD:394-405`), so parquet
+  *     row-group stats and partition pruning bound the read;
+  *   - A7 + W1 latest-row selection: latest by event_ts, then created
   *     (`CASE.MD:424-463`);
-  *   - J4 final per-view LEFT JOIN that null-pads entities with no
-  *     eligible feature rows (`CASE.MD:486-501`).
+  *   - J4 null padding: every entity row comes out exactly once, with
+  *     nulls where a view has no eligible row (`CASE.MD:486-501`).
   *
-  * Spark-first redesign (NOT a translation): the reference needs a
-  * synthetic `entity_row_unique_id` plus a dedup GROUP BY, a window, and
-  * two self-joins because it composes SQL text. Natively we collapse
-  * A7+W1+J2+J3 into ONE aggregation: `max(struct(event_ts, created_ts,
-  * feature...))` keyed by (view join keys, entity_ts). Struct ordering is
-  * lexicographic, so the max IS the argmax by (event_ts DESC, created
-  * DESC) — and any residual tie resolves deterministically on the feature
-  * values themselves (pinning the nondeterminism called out in SURVEY
-  * §7.4.1). Per view this costs exactly one shuffle for the join and one
-  * for the agg (both keyed on the join keys, so AQE can reuse the
-  * exchange), versus the reference's join + window + two more joins. No
-  * pandas round-trip, no task-closure shipping of the entity df (the
-  * reference's 4247 KiB closures, SURVEY §4 last row): the entity df
-  * stays a distributed DataFrame end-to-end, and at 1000-executor scale
-  * the per-view fold keeps every boundary a keyed exchange.
+  * Spark-first redesign (NOT a translation): the reference joins, ranks
+  * and joins back per view. Here the views that share join keys form one
+  * group, and each group is ONE sorted scan:
+  *   1. union the entity rows (kind 1) with every view's feature rows
+  *      (kind 0); a feature row carries its view's candidate struct
+  *      `(ts, created?, v0..vn)` in that view's own column;
+  *   2. one hash exchange on the join keys;
+  *   3. sort by `(ts, kind, struct_0..struct_n)`;
+  *   4. `last(struct_i, ignoreNulls = true)` over an explicit
+  *      `ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW` frame;
+  *   5. keep the kind-1 rows, and null a value whose `struct.ts` falls
+  *      before the view's TTL bound.
+  *
+  * Why this is the as-of argmax:
+  *   - at an equal ts a feature row (kind 0) sorts before an entity row
+  *     (kind 1), which is Feast's `<=`;
+  *   - among one view's rows the sort order IS the struct order, so the
+  *     last one at or before an entity row is `max(struct)` — latest
+  *     event_ts, then latest created, and any residual tie resolves
+  *     deterministically on the values themselves (SURVEY §7.4.1);
+  *   - the latest eligible row is inside the TTL iff any eligible row
+  *     is, so one bound check on it is the TTL filter;
+  *   - entity rows pass through the scan, so duplicate rows and extra
+  *     entity columns survive with no join back;
+  *   - feature rows with a null join key or a null ts are dropped first:
+  *     a window partition groups nulls together where an equi-join never
+  *     matches them, and a null ts would sort before every entity row.
+  *
+  * A second key group chains: the first group's output is the next
+  * group's entity side, so a retrieval costs one exchange per key group,
+  * not a join, an aggregate and a join back per view. A view with no
+  * join keys forms a group with an EMPTY partition spec, so that one
+  * case runs its scan in a single task. The output keeps the shape of
+  * the former per-view left-join fold: for each view in request order,
+  * its join keys and the entity ts move to the front, and its features
+  * follow the columns before them.
   */
 object PointInTimeJoin {
 
@@ -50,19 +72,6 @@ object PointInTimeJoin {
       features: Seq[Feature],
       joinKeys: Seq[String])
 
-  /** @param coarseBucketSeconds scale valve for TTL-less views: a view
-    *   WITHOUT a TTL has no J1 lower bound, so its pre-argmax join output
-    *   is |history per key| × |cutoffs per key| — a blow-up on
-    *   long-history keys at 100×. With a granularity g set, the feature
-    *   side is first argmax-reduced to latest-per-(key, g-bucket); a
-    *   cutoff then joins the reduced rows of FULL earlier buckets (all
-    *   eligible by construction) plus the raw rows of its own partial
-    *   bucket — max is associative, so the final argmax over that union
-    *   equals the argmax over all eligible rows (PitPropertySpec pins
-    *   equality). Join cost per key drops from O(history × cutoffs) to
-    *   O(buckets × cutoffs + bucket_width × cutoffs). Views WITH a TTL
-    *   are already bounded and skip this.
-    */
   def retrieve(
       spark: SparkSession,
       entityDf0: DataFrame,
@@ -70,8 +79,7 @@ object PointInTimeJoin {
       entityTsCol: String = "event_timestamp",
       fullFeatureNames: Boolean = true,
       prefilterByEntityRange: Boolean = true,
-      cacheEntity: Boolean = false,
-      coarseBucketSeconds: Option[Long] = None): DataFrame = {
+      cacheEntity: Boolean = false): DataFrame = {
 
     require(entityDf0.columns.contains(entityTsCol),
       s"entity dataframe lacks timestamp column '$entityTsCol'")
@@ -85,9 +93,9 @@ object PointInTimeJoin {
         entityDf0.withColumn(entityTsCol, to_timestamp(col(entityTsCol)))
       else entityDf0
 
-    // The entity df is consumed 2×V+1 times (per-view keyspace, final
-    // left joins, min/max bounds). For non-trivial entity inputs,
-    // persisting avoids recomputing its lineage for every pass — the
+    // The entity df is consumed twice (the min/max bounds agg and the
+    // first key group's scan). For non-trivial entity inputs,
+    // persisting avoids recomputing its lineage for the second pass — the
     // distributed analogue of the reference materializing the entity df
     // as a temp view (without its driver round-trip). NOTE: a caller
     // passing cacheEntity=true owns the unpersist; the FeatureStore
@@ -144,110 +152,118 @@ object PointInTimeJoin {
     if (!(entityDf1 eq entityDf0) ||
       entityDf1.schema(entityTsCol).nullable) { val _ = minEntityTs }
 
-    requests.foldLeft(entityDf) { case (acc, ViewRequest(fv, feats, joinKeys)) =>
+    requests.foreach { case ViewRequest(fv, _, joinKeys) =>
       joinKeys.foreach { k =>
         require(entityDf.columns.contains(k),
           s"entity dataframe lacks join key '$k' required by view '${fv.name}'")
       }
-      val tsField = fv.source.timestampField
-      val createdOpt = fv.source.createdTimestampColumn
+    }
 
-      // Feature-side scan: read only join keys + time columns + requested
-      // features (column pruning reaches the parquet scan); the entity
-      // time range lands inside the read so it pushes to PushedFilters
-      // even for raw-nanosecond sources (see SourceReader.read bounds).
-      val featCols = (joinKeys ++ Seq(tsField) ++ createdOpt ++ feats.map(_.name)).distinct
+    // Internal names: view v's candidate struct, feature output i
+    // (numbered across all views in request order), the row kind.
+    def struct_(v: Int) = s"__graft_pit_s$v"
+    def out_(i: Int) = s"__graft_pit_o$i"
+    val kind = "__graft_pit_kind"
+    val firstOut = requests.scanLeft(0)(_ + _.features.size)
+
+    // View v's bounded feature rows and its candidate struct
+    // (event_ts, created_ts, features): struct order is lexicographic,
+    // so the greatest struct is the latest row.
+    def featureRows(v: Int): (DataFrame, Column) = {
+      val ViewRequest(fv, feats, joinKeys) = requests(v)
+      val tsField = fv.source.timestampField
+      // Feature-side scan: the entity time range lands inside the read
+      // so it pushes to PushedFilters even for raw-nanosecond sources
+      // (see SourceReader.read bounds); only keys, time columns and
+      // requested features reach the output, so column pruning reaches
+      // the parquet scan.
       val upper = if (prefilterByEntityRange) Some(maxEntityTs) else None
       val lower =
         if (prefilterByEntityRange)
           fv.ttl.map(ttl => new java.sql.Timestamp(minEntityTs.getTime - ttl.toMillis))
         else None
+      // An equi-join never matches a null key and `ts <= entity.ts`
+      // never holds for a null ts; in the scan a null key would share a
+      // partition with null entity keys and a null ts would sort first,
+      // so both are dropped here.
       val feat = SourceReader.read(spark, fv.source, lower, upper)
-        .select(featCols.map(col): _*)
-
-      // Disambiguate: prefix every feature-side column.
-      val p = "__graft_f_"
-      val featP = feat.select(feat.columns.toIndexedSeq.map(c => col(c).as(p + c)): _*)
-
-      // A6: entity keyspace dedup — the PIT result depends only on
-      // (join keys, entity_ts), so aggregate over that compact keyspace,
-      // not the full entity df.
-      val keySpace = entityDf
-        .select((joinKeys :+ entityTsCol).distinct.map(col): _*)
-        .distinct()
-
-      // A7+W1+J2+J3 in one argmax: max of (event_ts, created_ts, features)
-      // struct == latest eligible row per (join keys, entity_ts).
-      val orderCols =
-        Seq(featP(p + tsField).as("__ts")) ++
-          createdOpt.map(c => featP(p + c).as("__created")) ++
-          feats.zipWithIndex.map { case (f, i) => featP(p + f.name).as(s"__v$i") }
-      val outCols = joinKeys.map(keySpace(_)) :+ keySpace(entityTsCol)
-
-      // J1: equi join on keys with the as-of range as residual predicate,
-      // producing (join keys, entity_ts, candidate struct) rows.
-      val candidates: DataFrame = (fv.ttl, coarseBucketSeconds) match {
-        case (None, Some(g)) =>
-          // TTL-less scale path: pre-reduce to latest-per-(key, bucket),
-          // then full-earlier-buckets (reduced) ∪ own-partial-bucket (raw).
-          val gMicros = g * 1000000L
-          // integral division spelled `div`, never `/` (DOUBLE division
-          // rounds for |micros| ≥ 2^53 — far-future sentinel timestamps
-          // in dirty feeds; the full/partial split only stayed correct
-          // because both sides shared the same monotone rounding — an
-          // invariant nothing pinned). The numerator is pmod-floored to
-          // an EXACT multiple of gMicros, so `div` is exact either sign;
-          // spelled through a named projection because `div` exists only
-          // in SQL-expression space (CLAUDE.md rule).
-          def withBucket(df: DataFrame, src: Column, out: String): DataFrame =
-            df.withColumn("__bsrc",
-                unix_micros(src) - pmod(unix_micros(src), lit(gMicros)))
-              .withColumn(out, expr(s"__bsrc div ${gMicros}L"))
-              .drop("__bsrc")
-          val bucketed = withBucket(featP, featP(p + tsField), "__fb")
-          val reduced = bucketed
-            .groupBy((joinKeys.map(k => col(p + k)) :+ col("__fb")): _*)
-            .agg(max(struct(orderCols: _*)).as("__cand"))
-          val keyed = withBucket(keySpace, col(entityTsCol), "__eb")
-          val equiR = joinKeys.map(k => reduced(p + k) === keyed(k))
-          val full = reduced
-            .join(keyed, (equiR :+ (reduced("__fb") < keyed("__eb"))).reduce(_ && _))
-            .select(outCols :+ col("__cand"): _*)
-          val equiB = joinKeys.map(k => bucketed(p + k) === keyed(k))
-          val partial = bucketed
-            .join(keyed, (equiB :+ (bucketed("__fb") === keyed("__eb")) :+
-              (bucketed(p + tsField) <= keyed(entityTsCol))).reduce(_ && _))
-            .select(outCols :+ struct(orderCols: _*).as("__cand"): _*)
-          full.unionByName(partial)
-        case _ =>
-          val equi = joinKeys.map(k => featP(p + k) === keySpace(k))
-          val asOf = featP(p + tsField) <= keySpace(entityTsCol)
-          val ttlBound = fv.ttl.map { ttl =>
-            // toMillis, not getSeconds: a sub-second TTL must not
-            // silently truncate to zero
-            featP(p + tsField) >=
-              keySpace(entityTsCol) - expr(s"INTERVAL ${ttl.toMillis} MILLISECOND")
-          }
-          val cond = (equi :+ asOf) ++ ttlBound
-          featP.join(keySpace, cond.reduce(_ && _), "inner")
-            .select(outCols :+ struct(orderCols: _*).as("__cand"): _*)
-      }
-
-      val best = candidates
-        .groupBy((joinKeys :+ entityTsCol).map(col): _*)
-        .agg(max(col("__cand")).as("__best"))
-
-      def outName(f: Feature): String =
-        if (fullFeatureNames) s"${fv.name}__${f.name}" else f.name
-      val cleaned = best.select(
-        (joinKeys :+ entityTsCol).map(col) ++
-          feats.zipWithIndex.map { case (f, i) =>
-            col(s"__best.__v$i").as(outName(f))
-          }: _*)
-
-      // J4: null-padding LEFT JOIN back onto the (possibly wider,
-      // possibly duplicated) entity df.
-      acc.join(cleaned, (joinKeys :+ entityTsCol).distinct, "left")
+        .filter((joinKeys :+ tsField).map(col(_).isNotNull).reduce(_ && _))
+      feat -> struct((Seq(feat(tsField).as("__ts")) ++
+        fv.source.createdTimestampColumn.map(c => feat(c).as("__created")) ++
+        feats.zipWithIndex.map { case (f, j) => feat(f.name).as(s"__v$j") }): _*)
     }
+
+    def scan(ent: DataFrame, group: Seq[Int]): DataFrame = {
+      val keys = requests(group.head).joinKeys
+      val rows = group.map(featureRows)
+      val nullStructs = group.zip(rows).map { case (v, (feat, cand)) =>
+        lit(null).cast(feat.select(cand).schema.head.dataType).as(struct_(v))
+      }
+      // Every side lines up by position with `ent`: a feature row puts
+      // its keys under the entity key names, its ts in the entity ts
+      // column, nulls in the other entity columns, and its struct in its
+      // own view's column.
+      val entSide = ent.select(ent.columns.toSeq.map(col) ++
+        Seq(lit(1).as(kind)) ++ nullStructs: _*)
+      val unioned = group.zip(rows).zipWithIndex.foldLeft(entSide) {
+        case (acc, ((v, (feat, cand)), i)) =>
+          val ViewRequest(fv, _, joinKeys) = requests(v)
+          acc.union(feat.select(ent.schema.fields.toSeq.map { f =>
+            if (joinKeys.contains(f.name)) col(f.name)
+            else if (f.name == entityTsCol) col(fv.source.timestampField).as(f.name)
+            else lit(null).cast(f.dataType).as(f.name)
+          } ++ Seq(lit(0).as(kind)) ++ nullStructs.updated(i, cand.as(struct_(v))): _*))
+      }
+      val w = Window.partitionBy(keys.map(col): _*)
+        .orderBy((col(entityTsCol) +: col(kind) +: group.map(u => col(struct_(u)))): _*)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+      val scanned = unioned
+        .select(ent.columns.toSeq.map(col) ++ Seq(col(kind)) ++
+          group.map(u => last(col(struct_(u)), ignoreNulls = true).over(w).as(struct_(u))): _*)
+        .filter(col(kind) === 1)
+      // The union widens a key or ts type the two sides disagree on (an
+      // INT entity key against a LONG source key); entity rows carry
+      // their own values, so casting back to the entity type is exact.
+      val passThrough = ent.schema.fields.toSeq.map { f =>
+        if (scanned.schema(f.name).dataType == f.dataType) col(f.name)
+        else col(f.name).cast(f.dataType).as(f.name)
+      }
+      scanned.select(passThrough ++ group.flatMap { v =>
+        val ViewRequest(fv, feats, _) = requests(v)
+        val s = struct_(v)
+        // toMillis, not getSeconds: a sub-second TTL must not silently
+        // truncate to zero
+        val inTtl = fv.ttl.map { ttl =>
+          col(s"$s.__ts") >=
+            col(entityTsCol) - expr(s"INTERVAL ${ttl.toMillis} MILLISECOND")
+        }
+        feats.indices.map { j =>
+          val value = col(s"$s.__v$j")
+          inTtl.fold(value)(when(_, value)).as(out_(firstOut(v) + j))
+        }
+      }: _*)
+    }
+
+    // Views on the same join keys share one scan; groups chain in order
+    // of first appearance.
+    val groups = requests.indices.groupBy(v => requests(v).joinKeys.toSet)
+      .values.toSeq.sortBy(_.head)
+    val scanned = groups.foldLeft(entityDf)(scan)
+
+    // The former per-view LEFT JOIN fold's column order: each view's
+    // join keys and the entity ts move to the front, its features go
+    // last.
+    val order = requests.zipWithIndex.foldLeft(
+        entityDf.columns.toSeq.map(c => col(c) -> Option(c))) {
+      case (acc, (ViewRequest(fv, feats, joinKeys), v)) =>
+        val using = (joinKeys :+ entityTsCol).distinct
+        using.map(c => col(c) -> Option(c)) ++
+          acc.filterNot { case (_, name) => name.exists(using.contains) } ++
+          feats.zipWithIndex.map { case (f, j) =>
+            col(out_(firstOut(v) + j))
+              .as(if (fullFeatureNames) s"${fv.name}__${f.name}" else f.name) -> None
+          }
+    }
+    scanned.select(order.map(_._1): _*)
   }
 }

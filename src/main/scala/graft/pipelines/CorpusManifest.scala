@@ -24,7 +24,7 @@ import org.apache.spark.sql.functions._
   *
   * Scale: one map-side-combinable keyed aggregation per manifest —
   * O(corpus) scan, key-domain output. Verify is the same scan plus a
-  * broadcast join of two manifest frames.
+  * full outer join of two key-domain-sized manifest frames.
   */
 object CorpusManifest {
 
@@ -244,7 +244,9 @@ object CorpusManifest {
     * swaps) and the
     * [[graft.pipelines.CurationState.RangesTable]] text manifest are
     * not parquet state tables and stay out of the disk-side listing.
-    * The stored manifest is tables-domain-sized, so it broadcasts.
+    * The diff is a shuffled full outer join: Spark cannot broadcast
+    * either side of a full outer join, and both sides are
+    * tables-domain-sized.
     */
   def verifyState(spark: SparkSession, stateDir: String,
       stored: DataFrame, dropCols: Seq[String] = Nil): DataFrame = {
@@ -281,7 +283,7 @@ object CorpusManifest {
     val s = stored
       .withColumnRenamed("n_rows", "n_rows_stored")
       .withColumnRenamed("content_digest", "content_digest_stored")
-    actual.join(broadcast(s), Seq("tbl"), "full_outer")
+    actual.join(s, Seq("tbl"), "full_outer")
       .withColumn("ok",
         (col("n_rows_actual") <=> col("n_rows_stored") &&
           col("content_digest_actual") <=> col("content_digest_stored"))
@@ -307,7 +309,9 @@ object CorpusManifest {
     * and diff against the stored one, per key. `ok = 1` only when every
     * field matches; keys present on one side only surface with the
     * other side's fields NULL (a dropped source is a mismatch, not an
-    * absence). The stored manifest is key-domain-sized — it broadcasts.
+    * absence). The diff is a shuffled full outer join on the
+    * key-domain-sized manifests (no side of a full outer join can
+    * broadcast).
     *
     * `sampleKeys > 0` is the cheap smoke tier between "trust" and a
     * full rescan: the first k manifest keys in md5 order of the key
@@ -350,7 +354,7 @@ object CorpusManifest {
     val s = fields.foldLeft(stored) { (d, f) => d.withColumnRenamed(f, s"${f}_stored") }
     val matched = fields.map(f => col(s"${f}_actual") <=> col(s"${f}_stored"))
       .reduce(_ && _)
-    a.join(broadcast(s), keyCols, "full_outer")
+    a.join(s, keyCols, "full_outer")
       .withColumn("ok", matched.cast("long"))
   }
 }

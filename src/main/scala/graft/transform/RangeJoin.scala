@@ -118,8 +118,9 @@ object RangeJoin {
   }
 }
 
-/** Generic as-of (backward-looking temporal) join, the argmax pattern of
-  * [[graft.offline.PointInTimeJoin]] without the feature-store framing:
+/** Generic as-of (backward-looking temporal) join, an argmax
+  * counterpart of [[graft.offline.PointInTimeJoin]] without the
+  * feature-store framing:
   * for each left row, attach the single latest right row with
   * `right.ts <= left.ts` (and `>= left.ts - ttl` when set) on matching
   * keys; left rows with no eligible match null-pad. One keyed shuffle

@@ -362,8 +362,7 @@ object Transforms {
 
   /** MERGE-style upsert into a parquet table with no table format: the
     * update batch unions with the current rows and the latest row per
-    * key survives (argmax on `versionCol` — the [[graft.offline.
-    * PointInTimeJoin]] fused-dedup posture, ONE keyed aggregation, no
+    * key survives (argmax on `versionCol` — ONE keyed aggregation, no
     * window), then the rewrite swaps in via [[compact]]'s rename
     * dance. Version ties break toward the update batch; a STALE update
     * (older version than the stored row) is a no-op for its key, which

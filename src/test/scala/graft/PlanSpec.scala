@@ -47,6 +47,59 @@ class PlanSpec extends SparkSpec {
       }
   }
 
+  /** The PIT scan read off the physical plan tree, top window first:
+    * per key group's Window, its partition column names and the
+    * hash-partitioning column names of every shuffle under it, plus the
+    * join operators under it. A cached entity frame is an
+    * InMemoryTableScan leaf, so the entity's own lineage is not walked:
+    * what is under a window is the scan's union of entity and feature
+    * rows. */
+  private def pitScans(df: org.apache.spark.sql.DataFrame)
+      : Seq[(Set[String], Seq[Set[String]], Int)] = {
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    val physical = df.queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case other => other
+    }
+    def names(es: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =
+      es.flatMap(_.references.map(_.name)).toSet
+    physical.collect { case w: WindowExec => w }.map { w =>
+      val shuffles = w.collect { case e: ShuffleExchangeExec =>
+        e.outputPartitioning match {
+          case h: HashPartitioning => names(h.expressions)
+          case other => Set(other.toString)
+        }
+      }
+      (names(w.partitionSpec), shuffles, w.collect { case j: BaseJoinExec => j }.size)
+    }
+  }
+
+  /** The pins every PIT retrieval plan holds: one window per key group,
+    * each partitioned on its keys with exactly its own hash exchange
+    * beneath it (the top window sees one per group), no join anywhere
+    * under the scan, an explicit running ROWS frame, no global window
+    * and no cartesian product. */
+  private def assertPitScan(df: org.apache.spark.sql.DataFrame,
+      keyGroups: Seq[Set[String]]): String = {
+    val p = plan(df)
+    val scans = pitScans(df)
+    assert(scans.map(_._1) === keyGroups, s"one window per key group:\n$p")
+    scans.zipWithIndex.foreach { case ((keys, shuffles, joins), i) =>
+      assert(shuffles === keyGroups.drop(i),
+        s"window on $keys: one hash exchange per key group beneath it:\n$p")
+      assert(joins === 0, s"a join sits under the PIT scan on $keys:\n$p")
+    }
+    assert("""specifiedwindowframe\(RowFrame, unboundedpreceding\$\(\), currentrow\$\(\)\)""".r
+      .findAllIn(p).nonEmpty, s"PIT scan must use an explicit running ROWS frame:\n$p")
+    assert(unpartitionedWindows(p) == 0, s"PIT scan must partition on its keys:\n$p")
+    assert(!p.contains("CartesianProduct"), s"PIT scan degenerated:\n$p")
+    p
+  }
+
   test("filter+project pushes predicates and prunes columns at the scan") {
     val p = plan(Queries.filterProject(spark, sf0001))
     assert(p.contains("PushedFilters"), "no pushdown section in scan")
@@ -62,11 +115,8 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"))
   }
 
-  test("PIT join plans as shuffled/broadcast equi-join with range residual, not nested loop") {
-    val p = plan(Queries.pitJoin(spark, sf0001))
-    assert(p.contains("HashJoin") || p.contains("SortMergeJoin"),
-      s"PIT join must be an equi-join:\n$p")
-    assert(!p.contains("CartesianProduct"), s"PIT join degenerated:\n$p")
+  test("PIT join: one keyed exchange under the window, no join") {
+    assertPitScan(Queries.pitJoin(spark, sf0001), Seq(Set("user_id")))
   }
 
   test("PIT join pushes the entity-range prefilter into the feature scan") {
@@ -77,11 +127,10 @@ class PlanSpec extends SparkSpec {
       s"entity-range prefilter not pushed to scan:\n$p")
   }
 
-  test("multi-view PIT: two equi-join legs, no cartesian, both range bounds pushed") {
-    val p = plan(Queries.pitMultiView(spark, sf0001))
-    assert(!p.contains("CartesianProduct"), s"a PIT leg degenerated:\n$p")
-    assert(p.contains("HashJoin") || p.contains("SortMergeJoin"),
-      s"PIT legs must be equi-joins:\n$p")
+  test("multi-view PIT: one exchange per key group, bounds pushed") {
+    // the o_custkey group chains onto the user_id group's output
+    val p = assertPitScan(Queries.pitMultiView(spark, sf0001),
+      Seq(Set("o_custkey"), Set("user_id")))
     // each view's entity-range prefilter reaches ITS source scan
     assert(p.contains("LessThan(ts,") || p.contains("LessThanOrEqual(ts,"),
       s"events-range prefilter not pushed:\n$p")
@@ -338,6 +387,34 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("SortMergeJoin") && p.contains("FullOuter"),
       s"full outer must be a sort-merge join:\n$p")
     assert(!p.contains("CartesianProduct"))
+  }
+
+  test("manifest verify: hint-free shuffled full outer diff") {
+    // no side of a full outer join can broadcast: a broadcast hint there
+    // is dropped with a HintErrorLogger warning on every call, so the
+    // diffs carry none and plan as a shuffled full outer join
+    import graft.pipelines.CorpusManifest
+    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+    val root = java.nio.file.Files.createTempDirectory("manifest-plan").toString
+    val docs = Seq((1L, "alpha beta", "web"), (2L, "gamma", "pdf"))
+      .toDF("doc_id", "text", "source")
+    CorpusManifest.write(docs, root, Seq("source"), "doc_id", "text")
+    // two state tables: with one, both sides' table name is the same
+    // literal and the equi-condition folds away
+    Seq("dd", "ledger").foreach(t => docs.write.parquet(s"$root/state/$t/batch=0"))
+    val diffs = Seq(
+      CorpusManifest.verify(spark, root, Seq("source"), "doc_id", "text"),
+      CorpusManifest.verifyState(spark, s"$root/state", CorpusManifest
+        .stateManifest(spark, s"$root/state", Seq("dd", "ledger")).localCheckpoint(true)))
+    diffs.foreach { d =>
+      val p = plan(d)
+      assert(d.queryExecution.analyzed.collect { case h: ResolvedHint => h }.isEmpty,
+        s"a join hint is left in the manifest diff:\n${d.queryExecution.analyzed}")
+      assert(p.contains("FullOuter") &&
+        (p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin")),
+        s"manifest diff must be a shuffled full outer join:\n$p")
+      assert(!p.contains("BroadcastHashJoin"), p)
+    }
   }
 
   test("sliding windows expand per-row then aggregate in one keyed pass") {
@@ -1763,19 +1840,15 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("multi-view coarse PIT: TTL-less feature side pre-reduces UNDER its join; full∪partial union; no window") {
-    val p = plan(Queries.pitMultiViewCoarse(spark, sf0001))
-    // the coarse valve engaged: the day-bucket pre-reduce aggregate
-    // (grouping on the __fb bucket) exists, and it feeds the as-of join
-    // rather than the raw history rows
-    assert(p.contains("__fb"),
-      s"TTL-less view must pre-reduce to latest-per-(key, bucket):\n$p")
-    // the lossless union of reduced-full-buckets and raw-partial-bucket
-    assert(p.contains("Union"), s"expected the full∪partial union:\n$p")
-    // the argmax formulation keeps the whole fold window-free, and the
-    // only non-equi operator is the 4-row entity-grid cross
-    assert(unpartitionedWindows(p) == 0, s"no window belongs in PIT:\n$p")
-    assert(!p.contains("CartesianProduct"), p)
+  test("TTL-less multi-view PIT: one exchange per key group, no join") {
+    // the TTL-less view's whole history passes through its key's sort
+    // once: no join to blow up, so no pre-reduction either
+    val p = assertPitScan(Queries.pitMultiViewTtlLess(spark, sf0001),
+      Seq(Set("o_custkey"), Set("user_id")))
+    assert(p.contains("LessThan(ts,") || p.contains("LessThanOrEqual(ts,"),
+      s"events upper bound not pushed:\n$p")
+    assert(p.contains("LessThanOrEqual(o_orderdate,"),
+      s"orders-range prefilter not pushed:\n$p")
   }
 
   test("codebook staleness: broadcast codebook, keyed joins, no global window") {

@@ -45,9 +45,9 @@ class ExamplesSmokeSpec extends SparkSpec {
       s"post-repair serving rows $repaired != corpus $corpus")
   }
 
-  test("PitStrategies: argmax == window PIT, coarse-bucket == direct TTL-less retrieval") {
-    // the internal requires ARE the pin (the demo throws on any
-    // disagreement); both diffs must read 0
-    assert(PitStrategies.run(spark, sf0001) === ((0L, 0L)))
+  test("PitStrategies: sorted-scan PIT == window PIT") {
+    // the internal require IS the pin (the demo throws on any
+    // disagreement); the diff must read 0
+    assert(PitStrategies.run(spark, sf0001) === 0L)
   }
 }
