@@ -5,7 +5,6 @@ import graft.sources.SourceReader
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DataType
 
 /** Point-in-time-correct (as-of) historical retrieval — the defining
   * operator of the system (reference `CASE.MD:337-501`, the Feast
@@ -159,12 +158,11 @@ object PointInTimeJoin {
       }
     }
 
-    // Internal names: view v's candidate struct, feature output i
-    // (numbered across all views in request order), the row kind.
+    // Internal names: view v's candidate struct, view v's feature j,
+    // the row kind.
     def struct_(v: Int) = s"__graft_pit_s$v"
-    def out_(i: Int) = s"__graft_pit_o$i"
+    def out_(v: Int, j: Int) = s"__graft_pit_o${v}_$j"
     val kind = "__graft_pit_kind"
-    val firstOut = requests.scanLeft(0)(_ + _.features.size)
 
     // View v's bounded feature rows and its candidate struct
     // (event_ts, created_ts, features): struct order is lexicographic,
@@ -239,7 +237,7 @@ object PointInTimeJoin {
         }
         feats.indices.map { j =>
           val value = col(s"$s.__v$j")
-          inTtl.fold(value)(when(_, value)).as(out_(firstOut(v) + j))
+          inTtl.fold(value)(when(_, value)).as(out_(v, j))
         }
       }: _*)
     }
@@ -260,7 +258,7 @@ object PointInTimeJoin {
         using.map(c => col(c) -> Option(c)) ++
           acc.filterNot { case (_, name) => name.exists(using.contains) } ++
           feats.zipWithIndex.map { case (f, j) =>
-            col(out_(firstOut(v) + j))
+            col(out_(v, j))
               .as(if (fullFeatureNames) s"${fv.name}__${f.name}" else f.name) -> None
           }
     }

@@ -244,9 +244,9 @@ object CorpusManifest {
     * swaps) and the
     * [[graft.pipelines.CurationState.RangesTable]] text manifest are
     * not parquet state tables and stay out of the disk-side listing.
-    * The diff is a shuffled full outer join: Spark cannot broadcast
-    * either side of a full outer join, and both sides are
-    * tables-domain-sized.
+    * The diff is a shuffled full outer join: a broadcast hash join
+    * cannot preserve the build side's unmatched rows, so Spark ignores
+    * a broadcast hint on a full outer join.
     */
   def verifyState(spark: SparkSession, stateDir: String,
       stored: DataFrame, dropCols: Seq[String] = Nil): DataFrame = {
@@ -309,9 +309,8 @@ object CorpusManifest {
     * and diff against the stored one, per key. `ok = 1` only when every
     * field matches; keys present on one side only surface with the
     * other side's fields NULL (a dropped source is a mismatch, not an
-    * absence). The diff is a shuffled full outer join on the
-    * key-domain-sized manifests (no side of a full outer join can
-    * broadcast).
+    * absence). The diff is a shuffled full outer join of the
+    * key-domain-sized manifests (see [[verifyState]]).
     *
     * `sampleKeys > 0` is the cheap smoke tier between "trust" and a
     * full rescan: the first k manifest keys in md5 order of the key

@@ -390,9 +390,10 @@ class PlanSpec extends SparkSpec {
   }
 
   test("manifest verify: hint-free shuffled full outer diff") {
-    // no side of a full outer join can broadcast: a broadcast hint there
-    // is dropped with a HintErrorLogger warning on every call, so the
-    // diffs carry none and plan as a shuffled full outer join
+    // a broadcast hash join cannot keep the build side's unmatched rows,
+    // so a broadcast hint on a full outer join is dropped with a
+    // HintErrorLogger warning on every call: the diffs carry none and
+    // plan as a shuffled full outer join
     import graft.pipelines.CorpusManifest
     import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
     val root = java.nio.file.Files.createTempDirectory("manifest-plan").toString

@@ -93,7 +93,7 @@ class PitPropertySpec extends SparkSpec {
 
   test("multi-view fold: colliding feature names, distinct join keys and TTLs") {
     // the reference's retrieval spans N feature views with different
-    // join keys and TTLs; the LEFT-JOIN fold must keep the entity row
+    // join keys and TTLs; the retrieval must keep the entity row
     // count and compute each view's argmax INDEPENDENTLY even though
     // every view names its feature identically ("value")
     def genFeatK(pool: Seq[String]): Gen[FeatRow] = for {
