@@ -32,8 +32,9 @@ object Bench {
       "anonym", "diversity")) "text"
     else "core"
   }
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+  /** The local session the board and [[Verify]] run on: `SPARK_GRAFT_CPUS`
+    * cores (default 4) and as many shuffle partitions. */
+  private[graft] def session(): SparkSession = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -44,6 +45,11 @@ object Bench {
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+  def main(args: Array[String]): Unit = {
+    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = session()
     // Warm the JVM/codegen/scan paths once so per-query timings measure
     // the query, not first-task class loading (same treatment for every
     // query; the first alphabetical query otherwise absorbs ~4s of init).

@@ -1,46 +1,19 @@
 package graft
 
 import org.apache.spark.sql.SparkSessionExtensions
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
 /** SparkSessionExtensions entry point: registers ALL of graft's custom
-  * Catalyst expressions as SQL functions — the same set as
-  * `functions.registerAll` (SourceReaderSpec exercises both surfaces) —
-  * in every session built with `.withExtensions(new GraftExtensions)`
-  * or `spark.sql.extensions=graft.GraftExtensions`.
+  * Catalyst expressions as SQL functions — the `functions.sqlFunctions`
+  * table that `functions.registerAll` also registers — in every session
+  * built with `.withExtensions(new GraftExtensions)` or
+  * `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    import org.apache.spark.sql.catalyst.FunctionIdentifier
-    import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
-    def info(name: String) =
-      new ExpressionInfo(classOf[GraftExtensions].getName, name)
-    def intLit(e: Expression, what: String): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"$what must be an integer literal, got $other")
+  override def apply(ext: SparkSessionExtensions): Unit =
+    graft.functions.functions.sqlFunctions.foreach { case (name, build) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo(classOf[GraftExtensions].getName, name), build))
     }
-    ext.injectFunction((FunctionIdentifier("rolling_hash"), info("rolling_hash"),
-      (es: Seq[Expression]) => graft.functions.RollingHash(es.head)))
-    ext.injectFunction((FunctionIdentifier("simhash64"), info("simhash64"),
-      (es: Seq[Expression]) => graft.functions.SimHash64(es.head)))
-    ext.injectFunction((FunctionIdentifier("dot_product"), info("dot_product"),
-      (es: Seq[Expression]) => graft.functions.DotProduct(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("normalized_md5"), info("normalized_md5"),
-      (es: Seq[Expression]) => graft.functions.NormalizedMd5(es.head)))
-    ext.injectFunction((FunctionIdentifier("word_shingles"), info("word_shingles"),
-      (es: Seq[Expression]) =>
-        graft.functions.WordShingles(es.head, intLit(es(1), "word_shingles n"))))
-    ext.injectFunction((FunctionIdentifier("minhash_sigs"), info("minhash_sigs"),
-      (es: Seq[Expression]) =>
-        graft.functions.MinHashSigs(es.head, intLit(es(1), "minhash_sigs n"))))
-    ext.injectFunction((FunctionIdentifier("nfc_normalize"), info("nfc_normalize"),
-      (es: Seq[Expression]) => graft.functions.NfcNormalize(es.head)))
-    ext.injectFunction((FunctionIdentifier("interleave_bits"), info("interleave_bits"),
-      (es: Seq[Expression]) => graft.functions.InterleaveBits(es(0), es(1))))
-    ext.injectFunction((FunctionIdentifier("q_grams_occ"), info("q_grams_occ"),
-      (es: Seq[Expression]) =>
-        graft.functions.QGramsWithOcc(es.head, intLit(es(1), "q_grams_occ q"))))
-    ext.injectFunction((FunctionIdentifier("quantize_i8"), info("quantize_i8"),
-      (es: Seq[Expression]) => graft.functions.QuantizeI8(es.head)))
-  }
 }

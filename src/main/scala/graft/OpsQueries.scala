@@ -5898,7 +5898,6 @@ object OpsQueries {
       |       md5(text) AS content_md5
       |FROM sel""".stripMargin
 
-  // ------------------------------------------------------------ catalogs
   // ------------------------------------------------------------ quality audit
   /** Declarative expectation suite over lineitem
     * ([[graft.ops.Quality.audit]]): four row-local rules fused into ONE
@@ -7536,305 +7535,166 @@ object OpsQueries {
       |             * 1000000.0 + 0.5) / 1000000.0 AS r2
       |FROM d""".stripMargin
 
-  val ops: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q219_ivf_balance" -> ivfBalanceQ _,
-    "q220_zipf_slope" -> zipfSlopeQ _,
-    "q215_rec_metrics" -> recMetrics _,
-    "q212_recommendations" -> recommendQ _,
-    "q205_emerging_terms" -> emergingTerms _,
-    "q206_tokenizer_fertility" -> tokenizerFertility _,
-    "q204_label_propagation" -> labelPropagationQ _,
-    "q201_dedup_sweep" -> dedupSweep _,
-    "q200_shared_spans" -> sharedSpansQ _,
-    "q199_mrr_map" -> mrrMapEval _,
-    "q189_kmv_setops" -> kmvSourceOverlap _,
-    "q190_winnowing" -> winnowingQ _,
-    "q193_rake" -> rakeQ _,
-    "q195_dsir" -> dsirQ _,
-    "q196_hll_merge" -> hllMergeQ _,
-    "q183_skipgram_ppmi" -> skipgramPpmiQ _,
-    "q184_mutual_info" -> miLangLength _,
-    "q178_ndcg" -> ndcgEval _,
-    "q179_cusum" -> cusumScan _,
-    "q180_t_closeness" -> tClosenessQ _,
-    "q181_conformal" -> conformalQ _,
-    "q182_wilson_rank" -> wilsonRank _,
-    "q118_hll_distinct" -> hllShingles _,
-    "q119_temperature_mix" -> temperatureMix _,
-    "q112_quality_audit" -> qualityAudit _,
-    "q113_jaccard_prefix" -> jaccardPrefix _,
-    "q114_cms_hitters" -> cmsHitters _,
-    "q115_chunking" -> chunkDocs _,
-    "q116_rrf_fusion" -> rrfUsers _,
-    "q14_text_stats" -> textStats _,
-    "q15_lang_id" -> langId _,
-    "q16_exact_dedup" -> exactDedup _,
-    "q17_minhash_lsh" -> minhashLsh _,
-    "q18_ngram_jaccard" -> ngramJaccard _,
-    "q19_simhash" -> simhash _,
-    "q20_knn_brute" -> knnBrute _,
-    "q21_embedding_dedup" -> embeddingDedup _,
-    "q22_multimodal_meta" -> multimodalMeta _,
-    "q23_frame_sample" -> frameSample _,
-    "q24_media_features" -> mediaFeatures _,
-    "q25_ivf_knn" -> ivfKnn _,
-    "q25b_ivf_trained" -> ivfTrainedQ _,
-    "q25c_ivf_train_curve" -> ivfTrainCurveQ _,
-    "q172b_pq_adc_trained" -> pqAdcTrainedQ _,
-    "q221_scalar_quant" -> scalarQuantQ _,
-    "q222_matryoshka_recall" -> matryoshkaRecallQ _,
-    "q223_late_interaction" -> lateInteractionQ _,
-    "q224_rrf_fusion" -> rrfFusionQ _,
-    "q225_anisotropy" -> anisotropyQ _,
-    "q227_ivf_probe_sweep" -> ivfProbeSweepQ _,
-    "q229_dedup_calibration" -> dedupCalibrationQ _,
-    "q231_maxp_retrieval" -> maxPRetrievalQ _,
-    "q232_simhash_calibration" -> simhashCalibrationQ _,
-    "q235_incremental_pipeline" -> incrementalPipelineQ _,
-    "q250_lifecycle_curation" -> lifecycleCurationQ _,
-    "q251_source_mix_drift" -> sourceMixDriftQ _,
-    "q252_ann_append_assign" -> annAppendAssignQ _,
-    "q253_ivf_state_serve" -> ivfStateServeQ _,
-    "q257_ivf_staleness_from_state" -> ivfStalenessFromStateQ _,
-    "q255_pq_state_serve" -> pqStateServeQ _,
-    "q256_pq_lifecycle_serve" -> pqLifecycleServeQ _,
-    "q236_incremental_lsh" -> incrementalLshQ _,
-    "q237_image_dedup" -> imageDedupQ _,
-    "q238_audio_dedup" -> audioDedupQ _,
-    "q239_audio_dedup_calibration" -> audioCalibrationQ _,
-    "q242_video_dedup" -> videoDedupQ _,
-    "q246_video_dedup_calibration" -> videoCalibrationQ _,
-    "q243_ingest_drift" -> ingestDriftQ _,
-    "q244_arrival_report" -> arrivalReportQ _,
-    "q245_corpus_manifest" -> corpusManifestQ _,
-    "q247_incremental_manifest" -> incrementalManifestQ _,
-    "q248_crossmodal_dedup" -> crossModalDedupQ _,
-    "q240_codebook_psi_staleness" -> codebookStalenessQ _,
-    "q241_codebook_retrain_psi" -> codebookRetrainQ _,
-    "q226_dim_variance" -> dimVarianceQ _,
-    "q26_rplsh_knn" -> rpLshKnn _,
-    "q27_fingerprints" -> fingerprints _,
-    "q32_seq_packing" -> seqPacking _,
-    "q33_stratified_sample" -> stratifiedSample _,
-    "q34_curation" -> curation _,
-    "q35_range_join" -> rangeJoinBands _,
-    "q37_pii_scrub" -> piiScrub _,
-    "q38_repetition" -> repetition _,
-    "q39_decontaminate" -> decontaminate _,
-    "q40_tfidf" -> tfidf _,
-    "q41_dedup_clusters" -> dedupClusters _,
-    "q42_corpus_profile" -> corpusProfile _,
-    "q43_hash_split" -> hashSplit _,
-    "q44_semantic_dedup" -> semanticDedup _,
-    "q45_unigram_lm" -> unigramLm _,
-    "q162_lm_perplexity" -> lmPerplexity _,
-    "q163_cluster_safe_split" -> clusterSafeSplitQ _,
-    "q164_incremental_lsh" -> incrementalLshDedupQ _,
-    "q165_centroid_drift" -> centroidDriftQ _,
-    "q168_simhash_join" -> simhashHammingJoin _,
-    "q171_pq_codes" -> pqCodesQ _,
-    "q172_pq_adc" -> pqAdcQ _,
-    "q174_label_noise" -> labelNoiseQ _,
-    "q174b_label_noise_ann" -> labelNoiseAnnQ _,
-    "q175_hard_negatives" -> hardNegativesQ _,
-    "q176_compaction_plan" -> compactionPlanQ _,
-    "q51_incremental_dedup" -> incrementalDedup _,
-    "q52_source_mix" -> sourceMix _,
-    "q53_media_resize" -> mediaResize _,
-    "q58_bigram_coverage" -> bigramCoverage _,
-    "q63_label_centroids" -> labelCentroids _,
-    "q66_pmi" -> pmiCollocations _,
-    "q67_nfc_normalize" -> nfcNormalizeDocs _,
-    "q73_negative_pairs" -> negativePairs _,
-    "q74_source_overlap" -> sourceOverlap _,
-    "q76_token_entropy" -> tokenEntropy _,
-    "q77_token_budget" -> tokenBudget _,
-    "q170_balanced_shards" -> balancedShardsQ _,
-    "q85_fuzzy_match" -> fuzzyMatch _,
-    "q89_inverted_index" -> invertedIndexQ _,
-    "q90_quantize_i8" -> quantizeEmbeddings _,
-    "q91_pagerank" -> pagerankTrade _,
-    "q93_triangles" -> triangles _,
-    "q94_bm25" -> bm25 _,
-    "q95_item_similarity" -> itemSimilarity _,
-    "q96_kcore" -> kCoreQ _,
-    "q97_feature_hash" -> featureHash _,
-    "q98_pps_sample" -> ppsSampleQ _,
-    "q100_binary_files" -> binaryFilesQ _,
-    "q123_png_decode" -> pngDecodeHistogram _,
-    "q124_bpe_merges" -> bpeMergesQ _,
-    "q125_kcenter_coreset" -> kCenterQ _,
-    "q126_golden_record" -> goldenRecords _,
-    "q128_rendezvous_shards" -> rendezvousShards _,
-    "q129_source_novelty" -> sourceNovelty _,
-    "q130_bpe_encode" -> bpeEncode _,
-    "q131_hamilton_quotas" -> hamiltonQ _,
-    "q134_capture_recapture" -> captureRecapture _,
-    "q139_k_anonymity" -> kAnonymityQ _,
-    "q140_source_interleave" -> sourceInterleave _,
-    "q141_dup_passages" -> duplicatePassagesQ _,
-    "q142_l_diversity" -> lDiversityQ _,
-    "q145_novelty_curve" -> noveltyCurve _,
-    "q146_gini_concentration" -> giniConcentration _,
-    "q147_oov_rate" -> oovRate _,
-    "q151_dedup_eval" -> dedupEval _,
-    "q152_fd_profile" -> fdProfile _,
-    "q153_mmr_rerank" -> mmrRerankQ _,
-    "q156_semantic_decontam" -> semanticDecontamination _,
-    "q158_ngram_containment" -> ngramContainmentQ _,
-    "q159_source_boilerplate" -> sourceBoilerplateMatrix _,
-    "q160_dedup_savings" -> dedupSavings _)
-
-  val opsOracles: Map[String, String] = Map(
-    "q219_ivf_balance" -> ivfBalanceSql,
-    "q220_zipf_slope" -> zipfSlopeSql,
-    "q215_rec_metrics" -> recMetricsSql,
-    "q212_recommendations" -> recommendSql,
-    "q205_emerging_terms" -> emergingTermsSql,
-    "q206_tokenizer_fertility" -> tokenizerFertilitySql,
-    "q204_label_propagation" -> labelPropagationSql,
-    "q201_dedup_sweep" -> dedupSweepSql,
-    "q200_shared_spans" -> sharedSpansSql,
-    "q199_mrr_map" -> mrrMapEvalSql,
-    "q189_kmv_setops" -> kmvSourceOverlapSql,
-    "q190_winnowing" -> winnowingSql,
-    "q193_rake" -> rakeSql,
-    "q195_dsir" -> dsirSql,
-    "q196_hll_merge" -> hllMergeSql,
-    "q183_skipgram_ppmi" -> skipgramPpmiSql,
-    "q184_mutual_info" -> miLangLengthSql,
-    "q178_ndcg" -> ndcgEvalSql,
-    "q179_cusum" -> cusumScanSql,
-    "q180_t_closeness" -> tClosenessSql,
-    "q181_conformal" -> conformalSql,
-    "q182_wilson_rank" -> wilsonRankSql,
-    "q123_png_decode" -> pngDecodeHistogramSql,
-    "q124_bpe_merges" -> bpeMergesSql,
-    "q125_kcenter_coreset" -> kCenterSql,
-    "q126_golden_record" -> goldenRecordsSql,
-    "q128_rendezvous_shards" -> rendezvousShardsSql,
-    "q129_source_novelty" -> sourceNoveltySql,
-    "q130_bpe_encode" -> bpeEncodeSql,
-    "q131_hamilton_quotas" -> hamiltonSql,
-    "q134_capture_recapture" -> captureRecaptureSql,
-    "q139_k_anonymity" -> kAnonymitySql,
-    "q140_source_interleave" -> sourceInterleaveSql,
-    "q141_dup_passages" -> duplicatePassagesSql,
-    "q142_l_diversity" -> lDiversitySql,
-    "q145_novelty_curve" -> noveltyCurveSql,
-    "q146_gini_concentration" -> giniConcentrationSql,
-    "q147_oov_rate" -> oovRateSql,
-    "q151_dedup_eval" -> dedupEvalSql,
-    "q152_fd_profile" -> fdProfileSql,
-    "q153_mmr_rerank" -> mmrRerankSql,
-    "q156_semantic_decontam" -> semanticDecontaminationSql,
-    "q158_ngram_containment" -> ngramContainmentSql,
-    "q159_source_boilerplate" -> sourceBoilerplateMatrixSql,
-    "q160_dedup_savings" -> dedupSavingsSql,
-    "q118_hll_distinct" -> hllShinglesSql,
-    "q119_temperature_mix" -> temperatureMixSql,
-    "q112_quality_audit" -> qualityAuditSql,
-    "q113_jaccard_prefix" -> jaccardPrefixSql,
-    "q114_cms_hitters" -> cmsHittersSql,
-    "q115_chunking" -> chunkDocsSql,
-    "q116_rrf_fusion" -> rrfUsersSql,
-    "q14_text_stats" -> textStatsSql,
-    "q15_lang_id" -> langIdSql,
-    "q16_exact_dedup" -> exactDedupSql,
-    "q17_minhash_lsh" -> minhashLshSql,
-    "q18_ngram_jaccard" -> ngramJaccardSql,
-    "q19_simhash" -> simhashSql,
-    "q20_knn_brute" -> knnBruteSql,
-    "q21_embedding_dedup" -> embeddingDedupSql,
-    "q22_multimodal_meta" -> multimodalMetaSql,
-    "q23_frame_sample" -> frameSampleSql,
-    "q24_media_features" -> mediaFeaturesSql,
-    "q25_ivf_knn" -> ivfKnnSql,
-    "q25b_ivf_trained" -> ivfTrainedSql,
-    "q25c_ivf_train_curve" -> ivfTrainCurveSql,
-    "q172b_pq_adc_trained" -> pqAdcTrainedSql,
-    "q221_scalar_quant" -> scalarQuantSql,
-    "q222_matryoshka_recall" -> matryoshkaRecallSql,
-    "q223_late_interaction" -> lateInteractionSql,
-    "q224_rrf_fusion" -> rrfFusionSql,
-    "q225_anisotropy" -> anisotropySql,
-    "q227_ivf_probe_sweep" -> ivfProbeSweepSql,
-    "q229_dedup_calibration" -> dedupCalibrationSql,
-    "q231_maxp_retrieval" -> maxPRetrievalSql,
-    "q232_simhash_calibration" -> simhashCalibrationSql,
-    "q235_incremental_pipeline" -> incrementalPipelineSql,
-    "q250_lifecycle_curation" -> lifecycleCurationSql,
-    "q251_source_mix_drift" -> sourceMixDriftSql,
-    "q252_ann_append_assign" -> annAppendAssignSql,
-    "q253_ivf_state_serve" -> ivfStateServeSql,
-    "q257_ivf_staleness_from_state" -> ivfStalenessFromStateSql,
+  // ------------------------------------------------------------ catalogs
+  val catalog: Seq[Query] = Seq(
+    Query("q219_ivf_balance", ivfBalanceQ, ivfBalanceSql),
+    Query("q220_zipf_slope", zipfSlopeQ, zipfSlopeSql),
+    Query("q215_rec_metrics", recMetrics, recMetricsSql),
+    Query("q212_recommendations", recommendQ, recommendSql),
+    Query("q205_emerging_terms", emergingTerms, emergingTermsSql),
+    Query("q206_tokenizer_fertility", tokenizerFertility,
+      tokenizerFertilitySql),
+    Query("q204_label_propagation", labelPropagationQ, labelPropagationSql),
+    Query("q201_dedup_sweep", dedupSweep, dedupSweepSql),
+    Query("q200_shared_spans", sharedSpansQ, sharedSpansSql),
+    Query("q199_mrr_map", mrrMapEval, mrrMapEvalSql),
+    Query("q189_kmv_setops", kmvSourceOverlap, kmvSourceOverlapSql),
+    Query("q190_winnowing", winnowingQ, winnowingSql),
+    Query("q193_rake", rakeQ, rakeSql),
+    Query("q195_dsir", dsirQ, dsirSql),
+    Query("q196_hll_merge", hllMergeQ, hllMergeSql),
+    Query("q183_skipgram_ppmi", skipgramPpmiQ, skipgramPpmiSql),
+    Query("q184_mutual_info", miLangLength, miLangLengthSql),
+    Query("q178_ndcg", ndcgEval, ndcgEvalSql),
+    Query("q179_cusum", cusumScan, cusumScanSql),
+    Query("q180_t_closeness", tClosenessQ, tClosenessSql),
+    Query("q181_conformal", conformalQ, conformalSql),
+    Query("q182_wilson_rank", wilsonRank, wilsonRankSql),
+    Query("q118_hll_distinct", hllShingles, hllShinglesSql),
+    Query("q119_temperature_mix", temperatureMix, temperatureMixSql),
+    Query("q112_quality_audit", qualityAudit, qualityAuditSql),
+    Query("q113_jaccard_prefix", jaccardPrefix, jaccardPrefixSql),
+    Query("q114_cms_hitters", cmsHitters, cmsHittersSql),
+    Query("q115_chunking", chunkDocs, chunkDocsSql),
+    Query("q116_rrf_fusion", rrfUsers, rrfUsersSql),
+    Query("q14_text_stats", textStats, textStatsSql),
+    Query("q15_lang_id", langId, langIdSql),
+    Query("q16_exact_dedup", exactDedup, exactDedupSql),
+    Query("q17_minhash_lsh", minhashLsh, minhashLshSql),
+    Query("q18_ngram_jaccard", ngramJaccard, ngramJaccardSql),
+    Query("q19_simhash", simhash, simhashSql),
+    Query("q20_knn_brute", knnBrute, knnBruteSql),
+    Query("q21_embedding_dedup", embeddingDedup, embeddingDedupSql),
+    Query("q22_multimodal_meta", multimodalMeta, multimodalMetaSql),
+    Query("q23_frame_sample", frameSample, frameSampleSql),
+    Query("q24_media_features", mediaFeatures, mediaFeaturesSql),
+    Query("q25_ivf_knn", ivfKnn, ivfKnnSql),
+    Query("q25b_ivf_trained", ivfTrainedQ, ivfTrainedSql),
+    Query("q25c_ivf_train_curve", ivfTrainCurveQ, ivfTrainCurveSql),
+    Query("q172b_pq_adc_trained", pqAdcTrainedQ, pqAdcTrainedSql),
+    Query("q221_scalar_quant", scalarQuantQ, scalarQuantSql),
+    Query("q222_matryoshka_recall", matryoshkaRecallQ, matryoshkaRecallSql),
+    Query("q223_late_interaction", lateInteractionQ, lateInteractionSql),
+    Query("q224_rrf_fusion", rrfFusionQ, rrfFusionSql),
+    Query("q225_anisotropy", anisotropyQ, anisotropySql),
+    Query("q227_ivf_probe_sweep", ivfProbeSweepQ, ivfProbeSweepSql),
+    Query("q229_dedup_calibration", dedupCalibrationQ, dedupCalibrationSql),
+    Query("q231_maxp_retrieval", maxPRetrievalQ, maxPRetrievalSql),
+    Query("q232_simhash_calibration", simhashCalibrationQ,
+      simhashCalibrationSql),
+    Query("q235_incremental_pipeline", incrementalPipelineQ,
+      incrementalPipelineSql),
+    Query("q250_lifecycle_curation", lifecycleCurationQ, lifecycleCurationSql),
+    Query("q251_source_mix_drift", sourceMixDriftQ, sourceMixDriftSql),
+    Query("q252_ann_append_assign", annAppendAssignQ, annAppendAssignSql),
+    Query("q253_ivf_state_serve", ivfStateServeQ, ivfStateServeSql),
+    Query("q257_ivf_staleness_from_state", ivfStalenessFromStateQ,
+      ivfStalenessFromStateSql),
     // q255's served retrieval equals the from-scratch trained ADC —
     // the q172b oracle verbatim IS the losslessness claim
-    "q255_pq_state_serve" -> pqAdcTrainedSql,
+    Query("q255_pq_state_serve", pqStateServeQ, pqAdcTrainedSql),
     // q256's retrain→repair→serve equals the from-scratch trained ADC —
     // the stale v1 generation must drop out of the answer entirely
-    "q256_pq_lifecycle_serve" -> pqAdcTrainedSql,
-    "q236_incremental_lsh" -> incrementalLshSql,
-    "q237_image_dedup" -> imageDedupSql,
-    "q238_audio_dedup" -> audioDedupSql,
-    "q239_audio_dedup_calibration" -> audioCalibrationSql,
-    "q242_video_dedup" -> videoDedupSql,
-    "q246_video_dedup_calibration" -> videoCalibrationSql,
-    "q243_ingest_drift" -> ingestDriftSql,
-    "q244_arrival_report" -> arrivalReportSql,
-    "q245_corpus_manifest" -> corpusManifestSql,
-    "q247_incremental_manifest" -> corpusManifestSql,
-    "q248_crossmodal_dedup" -> crossModalDedupSql,
-    "q240_codebook_psi_staleness" -> codebookStalenessSql,
-    "q241_codebook_retrain_psi" -> codebookRetrainSql,
-    "q226_dim_variance" -> dimVarianceSql,
-    "q26_rplsh_knn" -> rpLshKnnSql,
-    "q27_fingerprints" -> fingerprintsSql,
-    "q32_seq_packing" -> seqPackingSql,
-    "q33_stratified_sample" -> stratifiedSampleSql,
-    "q34_curation" -> curationSql,
-    "q35_range_join" -> rangeJoinBandsSql,
-    "q37_pii_scrub" -> piiScrubSql,
-    "q38_repetition" -> repetitionSql,
-    "q39_decontaminate" -> decontaminateSql,
-    "q40_tfidf" -> tfidfSql,
-    "q41_dedup_clusters" -> dedupClustersSql,
-    "q42_corpus_profile" -> corpusProfileSql,
-    "q43_hash_split" -> hashSplitSql,
-    "q44_semantic_dedup" -> semanticDedupSql,
-    "q45_unigram_lm" -> unigramLmSql,
-    "q162_lm_perplexity" -> lmPerplexitySql,
-    "q163_cluster_safe_split" -> clusterSafeSplitSql,
-    "q164_incremental_lsh" -> incrementalLshDedupSql,
-    "q165_centroid_drift" -> centroidDriftSql,
-    "q168_simhash_join" -> simhashHammingJoinSql,
-    "q171_pq_codes" -> pqCodesSql,
-    "q172_pq_adc" -> pqAdcSql,
-    "q174_label_noise" -> labelNoiseSql,
-    "q174b_label_noise_ann" -> labelNoiseAnnSql,
-    "q175_hard_negatives" -> hardNegativesSql,
-    "q176_compaction_plan" -> compactionPlanSql,
-    "q51_incremental_dedup" -> incrementalDedupSql,
-    "q52_source_mix" -> sourceMixSql,
-    "q53_media_resize" -> mediaResizeSql,
-    "q58_bigram_coverage" -> bigramCoverageSql,
-    "q63_label_centroids" -> labelCentroidsSql,
-    "q66_pmi" -> pmiCollocationsSql,
-    "q67_nfc_normalize" -> nfcNormalizeDocsSql,
-    "q73_negative_pairs" -> negativePairsSql,
-    "q74_source_overlap" -> sourceOverlapSql,
-    "q76_token_entropy" -> tokenEntropySql,
-    "q77_token_budget" -> tokenBudgetSql,
-    "q170_balanced_shards" -> balancedShardsSql,
-    "q85_fuzzy_match" -> fuzzyMatchSql,
-    "q89_inverted_index" -> invertedIndexSql,
-    "q90_quantize_i8" -> quantizeEmbeddingsSql,
-    "q91_pagerank" -> pagerankTradeSql,
-    "q93_triangles" -> trianglesSql,
-    "q94_bm25" -> bm25Sql,
-    "q95_item_similarity" -> itemSimilaritySql,
-    "q96_kcore" -> kCoreSql,
-    "q97_feature_hash" -> featureHashSql,
-    "q98_pps_sample" -> ppsSampleSql,
-    "q100_binary_files" -> binaryFilesSql)
+    Query("q256_pq_lifecycle_serve", pqLifecycleServeQ, pqAdcTrainedSql),
+    Query("q236_incremental_lsh", incrementalLshQ, incrementalLshSql),
+    Query("q237_image_dedup", imageDedupQ, imageDedupSql),
+    Query("q238_audio_dedup", audioDedupQ, audioDedupSql),
+    Query("q239_audio_dedup_calibration", audioCalibrationQ,
+      audioCalibrationSql),
+    Query("q242_video_dedup", videoDedupQ, videoDedupSql),
+    Query("q246_video_dedup_calibration", videoCalibrationQ,
+      videoCalibrationSql),
+    Query("q243_ingest_drift", ingestDriftQ, ingestDriftSql),
+    Query("q244_arrival_report", arrivalReportQ, arrivalReportSql),
+    Query("q245_corpus_manifest", corpusManifestQ, corpusManifestSql),
+    Query("q247_incremental_manifest", incrementalManifestQ, corpusManifestSql),
+    Query("q248_crossmodal_dedup", crossModalDedupQ, crossModalDedupSql),
+    Query("q240_codebook_psi_staleness", codebookStalenessQ,
+      codebookStalenessSql),
+    Query("q241_codebook_retrain_psi", codebookRetrainQ, codebookRetrainSql),
+    Query("q226_dim_variance", dimVarianceQ, dimVarianceSql),
+    Query("q26_rplsh_knn", rpLshKnn, rpLshKnnSql),
+    Query("q27_fingerprints", fingerprints, fingerprintsSql),
+    Query("q32_seq_packing", seqPacking, seqPackingSql),
+    Query("q33_stratified_sample", stratifiedSample, stratifiedSampleSql),
+    Query("q34_curation", curation, curationSql),
+    Query("q35_range_join", rangeJoinBands, rangeJoinBandsSql),
+    Query("q37_pii_scrub", piiScrub, piiScrubSql),
+    Query("q38_repetition", repetition, repetitionSql),
+    Query("q39_decontaminate", decontaminate, decontaminateSql),
+    Query("q40_tfidf", tfidf, tfidfSql),
+    Query("q41_dedup_clusters", dedupClusters, dedupClustersSql),
+    Query("q42_corpus_profile", corpusProfile, corpusProfileSql),
+    Query("q43_hash_split", hashSplit, hashSplitSql),
+    Query("q44_semantic_dedup", semanticDedup, semanticDedupSql),
+    Query("q45_unigram_lm", unigramLm, unigramLmSql),
+    Query("q162_lm_perplexity", lmPerplexity, lmPerplexitySql),
+    Query("q163_cluster_safe_split", clusterSafeSplitQ, clusterSafeSplitSql),
+    Query("q164_incremental_lsh", incrementalLshDedupQ, incrementalLshDedupSql),
+    Query("q165_centroid_drift", centroidDriftQ, centroidDriftSql),
+    Query("q168_simhash_join", simhashHammingJoin, simhashHammingJoinSql),
+    Query("q171_pq_codes", pqCodesQ, pqCodesSql),
+    Query("q172_pq_adc", pqAdcQ, pqAdcSql),
+    Query("q174_label_noise", labelNoiseQ, labelNoiseSql),
+    Query("q174b_label_noise_ann", labelNoiseAnnQ, labelNoiseAnnSql),
+    Query("q175_hard_negatives", hardNegativesQ, hardNegativesSql),
+    Query("q176_compaction_plan", compactionPlanQ, compactionPlanSql),
+    Query("q51_incremental_dedup", incrementalDedup, incrementalDedupSql),
+    Query("q52_source_mix", sourceMix, sourceMixSql),
+    Query("q53_media_resize", mediaResize, mediaResizeSql),
+    Query("q58_bigram_coverage", bigramCoverage, bigramCoverageSql),
+    Query("q63_label_centroids", labelCentroids, labelCentroidsSql),
+    Query("q66_pmi", pmiCollocations, pmiCollocationsSql),
+    Query("q67_nfc_normalize", nfcNormalizeDocs, nfcNormalizeDocsSql),
+    Query("q73_negative_pairs", negativePairs, negativePairsSql),
+    Query("q74_source_overlap", sourceOverlap, sourceOverlapSql),
+    Query("q76_token_entropy", tokenEntropy, tokenEntropySql),
+    Query("q77_token_budget", tokenBudget, tokenBudgetSql),
+    Query("q170_balanced_shards", balancedShardsQ, balancedShardsSql),
+    Query("q85_fuzzy_match", fuzzyMatch, fuzzyMatchSql),
+    Query("q89_inverted_index", invertedIndexQ, invertedIndexSql),
+    Query("q90_quantize_i8", quantizeEmbeddings, quantizeEmbeddingsSql),
+    Query("q91_pagerank", pagerankTrade, pagerankTradeSql),
+    Query("q93_triangles", triangles, trianglesSql),
+    Query("q94_bm25", bm25, bm25Sql),
+    Query("q95_item_similarity", itemSimilarity, itemSimilaritySql),
+    Query("q96_kcore", kCoreQ, kCoreSql),
+    Query("q97_feature_hash", featureHash, featureHashSql),
+    Query("q98_pps_sample", ppsSampleQ, ppsSampleSql),
+    Query("q100_binary_files", binaryFilesQ, binaryFilesSql),
+    Query("q123_png_decode", pngDecodeHistogram, pngDecodeHistogramSql),
+    Query("q124_bpe_merges", bpeMergesQ, bpeMergesSql),
+    Query("q125_kcenter_coreset", kCenterQ, kCenterSql),
+    Query("q126_golden_record", goldenRecords, goldenRecordsSql),
+    Query("q128_rendezvous_shards", rendezvousShards, rendezvousShardsSql),
+    Query("q129_source_novelty", sourceNovelty, sourceNoveltySql),
+    Query("q130_bpe_encode", bpeEncode, bpeEncodeSql),
+    Query("q131_hamilton_quotas", hamiltonQ, hamiltonSql),
+    Query("q134_capture_recapture", captureRecapture, captureRecaptureSql),
+    Query("q139_k_anonymity", kAnonymityQ, kAnonymitySql),
+    Query("q140_source_interleave", sourceInterleave, sourceInterleaveSql),
+    Query("q141_dup_passages", duplicatePassagesQ, duplicatePassagesSql),
+    Query("q142_l_diversity", lDiversityQ, lDiversitySql),
+    Query("q145_novelty_curve", noveltyCurve, noveltyCurveSql),
+    Query("q146_gini_concentration", giniConcentration, giniConcentrationSql),
+    Query("q147_oov_rate", oovRate, oovRateSql),
+    Query("q151_dedup_eval", dedupEval, dedupEvalSql),
+    Query("q152_fd_profile", fdProfile, fdProfileSql),
+    Query("q153_mmr_rerank", mmrRerankQ, mmrRerankSql),
+    Query("q156_semantic_decontam", semanticDecontamination,
+      semanticDecontaminationSql),
+    Query("q158_ngram_containment", ngramContainmentQ, ngramContainmentSql),
+    Query("q159_source_boilerplate", sourceBoilerplateMatrix,
+      sourceBoilerplateMatrixSql),
+    Query("q160_dedup_savings", dedupSavings, dedupSavingsSql))
 }

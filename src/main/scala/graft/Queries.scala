@@ -11,7 +11,7 @@ import graft.util.Rounding.{pround, proundSql}
 import java.time.Duration
 
 /** The operator catalog behind [[SparkEntry.queries]]: one named query per
-  * implemented operator from SURVEY.md §2, paired (in [[oracles]]) with
+  * implemented operator from SURVEY.md §2, each paired in [[catalog]] with
   * ANSI SQL the driver replays in DuckDB over the same parquet tables.
   *
   * Oracle-parity conventions (see TESTDATA.md; events.ts is parquet
@@ -5599,239 +5599,123 @@ object Queries {
     }.mkString("\nUNION ALL\n")
 
   // ---------------------------------------------------------------- catalogs
-  val relational: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_hourly_agg" -> hourlyAgg _,
-    "q02_filter_project" -> filterProject _,
-    "q03_join_agg" -> joinAgg _,
-    "q04_case_when" -> caseWhen _,
-    "q05_window_latest" -> windowLatest _,
-    "q06_pit_join" -> pitJoin _,
-    "q06b_pit_dense" -> pitDense _,
-    "q06c_pit_multiview" -> pitMultiView _,
-    "q06d_pit_multiview_coarse" -> pitMultiViewTtlLess _,
-    "q07_materialize_latest" -> materializeLatest _,
-    "q08_distinct" -> distinctPairs _,
-    "q09_collect_set" -> collectSet _,
-    "q10_json_extract" -> jsonExtract _,
-    "q11_explode_tokens" -> explodeTokens _,
-    "q12_topn" -> topN _,
-    "q13_surrogate_key" -> surrogateKey _,
-    "q28_weather_gold" -> weatherGoldChain _,
-    "q29_map_flatten" -> mapFlatten _,
-    "q30_csv_roundtrip" -> csvRoundTrip _,
-    "q31_avro_roundtrip" -> avroRoundTrip _,
-    "q36_time_formats" -> timeFormats _,
-    "q46_json_roundtrip" -> jsonRoundTrip _,
-    "q47_orc_roundtrip" -> orcRoundTrip _,
-    "q48_sessionize" -> sessionize _,
-    "q49_rollup" -> rollupAgg _,
-    "q50_pivot" -> pivotCounts _,
-    "q54_cube" -> cubeAgg _,
-    "q55_event_deltas" -> eventDeltas _,
-    "q56_ntile" -> ntileBuckets _,
-    "q57_zscore" -> zscoreScale _,
-    "q59_purge_optout" -> purgeOptOut _,
-    "q60_churn_setops" -> churnSetOps _,
-    "q61_full_outer" -> fullOuterRecon _,
-    "q62_sliding_window" -> slidingWindowAgg _,
-    "q64_quantiles" -> quantileStats _,
-    "q65_mad_outliers" -> madOutliers _,
-    "q68_histogram" -> histogramBuckets _,
-    "q69_corr_stats" -> corrStats _,
-    "q70_ewma" -> ewmaRecency _,
-    "q71_rank_family" -> rankFamily _,
-    "q72_schema_evolution" -> schemaEvolution _,
-    "q75_psi_drift" -> psiDrift _,
-    "q78_grouping_sets" -> groupingSets _,
-    "q79_exists_subquery" -> existsSubquery _,
-    "q80_winsorize" -> winsorize _,
-    "q81_mode" -> modeValue _,
-    "q82_funnel" -> funnel _,
-    "q83_retention" -> retentionCohorts _,
-    "q84_share_of_hour" -> shareOfHour _,
-    "q86_gap_fill" -> gapFillHourly _,
-    "q87_scd2" -> scd2Versions _,
-    "q88_transitions" -> eventTransitions _,
-    "q92_linear_count" -> linearCount _,
-    "q99_skyline" -> skylineCustomers _,
-    "q101_attribution" -> lastTouchAttribution _,
-    "q102_cuped" -> cupedReadout _,
-    "q103_trailing_window" -> trailingWindow _,
-    "q104_quantile_normalize" -> quantileNormalize _,
-    "q105_unpivot" -> unpivotWide _,
-    "q106_randomized_response" -> randomizedResponse _,
-    "q107_snapshot_diff" -> snapshotDiffOrders _,
-    "q108_auc" -> aucCohorts _,
-    "q109_chi2_screen" -> chi2Screen _,
-    "q110_interpolate" -> interpolateHourly _,
-    "q111_purged_folds" -> purgedFolds _,
-    "q117_calibration" -> calibrationReadout _,
-    "q120_windowed_funnel" -> windowedFunnel _,
-    "q121_ks_test" -> ksDrift _,
-    "q122_spearman" -> spearmanStats _,
-    "q127_ols_trend" -> olsTrend _,
-    "q132_delta_contribution" -> deltaContribution _,
-    "q133_two_proportion_z" -> twoProportionZ _,
-    "q135_gap_features" -> gapFeatures _,
-    "q136_path_trigrams" -> pathTrigrams _,
-    "q137_emd_drift" -> emdDrift _,
-    "q138_srm_check" -> srmCheck _,
-    "q143_jsd_drift" -> jsdDrift _,
-    "q144_zorder_layout" -> zorderLayout _,
-    "q148_benford" -> benfordScreen _,
-    "q149_event_lift" -> eventLift _,
-    "q150_kmv_distinct" -> kmvDistinct _,
-    "q154_join_forecast" -> joinForecast _,
-    "q155_seasonal_profile" -> seasonalProfileQ _,
-    "q157_importance_weights" -> importanceWeights _,
-    "q161_burstiness" -> burstiness _,
-    "q166_nearest_asof" -> nearestAsof _,
-    "q167_time_to_convert" -> timeToConvert _,
-    "q169_lateness_profile" -> latenessProfile _,
-    "q173_zone_maps" -> zoneMapPruning _,
-    "q177_column_stats" -> columnStats _,
-    "q177b_column_stats_sketch" -> columnStatsSketch _,
-    "q228_incremental_rollup" -> incrementalRollupQ _,
-    "q230_woe_iv" -> woeIvQ _,
-    "q233_next_event" -> nextEventQ _,
-    "q234_freshness" -> freshnessQ _,
-    "q185_interval_overlap" -> intervalOverlap _,
-    "q186_mann_whitney" -> mannWhitney _,
-    "q187_kaplan_meier" -> kaplanMeierQ _,
-    "q188_target_encoding" -> targetEncoding _,
-    "q191_fairness_audit" -> fairnessAudit _,
-    "q192_dp_counts" -> dpNoisyCounts _,
-    "q194_kendall_tau" -> kendallQ _,
-    "q197_markov_absorption" -> markovAbsorptionQ _,
-    "q198_bootstrap_ci" -> bootstrapCIQ _,
-    "q202_forecast_backtest" -> forecastBacktest _,
-    "q203_bitemporal_pit" -> bitemporalPit _,
-    "q207_rfm_features" -> rfmFeatures _,
-    "q208_neyman_allocation" -> neymanAllocation _,
-    "q209_mde_power" -> mdePower _,
-    "q210_overdispersion" -> overdispersion _,
-    "q211_training_matrix" -> trainingMatrix _,
-    "q213_sequential_looks" -> sequentialLooks _,
-    "q214_delta_ratio" -> deltaMethodRatio _,
-    "q216_feature_screen" -> featureScreen _,
-    "q217_gains_table" -> gainsTable _,
-    "q218_catalog_health" -> catalogHealth _)
-
-  val relationalOracles: Map[String, String] = Map(
-    "q01_hourly_agg" -> hourlyAggSql,
-    "q02_filter_project" -> filterProjectSql,
-    "q03_join_agg" -> joinAggSql,
-    "q04_case_when" -> caseWhenSql,
-    "q05_window_latest" -> windowLatestSql,
-    "q06_pit_join" -> pitJoinSql,
-    "q06b_pit_dense" -> pitDenseSql,
-    "q06c_pit_multiview" -> pitMultiViewSql,
-    "q06d_pit_multiview_coarse" -> pitMultiViewTtlLessSql,
-    "q07_materialize_latest" -> materializeLatestSql,
-    "q08_distinct" -> distinctPairsSql,
-    "q09_collect_set" -> collectSetSql,
-    "q10_json_extract" -> jsonExtractSql,
-    "q11_explode_tokens" -> explodeTokensSql,
-    "q12_topn" -> topNSql,
-    "q13_surrogate_key" -> surrogateKeySql,
-    "q28_weather_gold" -> weatherGoldChainSql,
-    "q29_map_flatten" -> mapFlattenSql,
-    "q30_csv_roundtrip" -> csvRoundTripSql,
-    "q31_avro_roundtrip" -> avroRoundTripSql,
-    "q36_time_formats" -> timeFormatsSql,
-    "q46_json_roundtrip" -> jsonRoundTripSql,
-    "q47_orc_roundtrip" -> orcRoundTripSql,
-    "q48_sessionize" -> sessionizeSql,
-    "q49_rollup" -> rollupAggSql,
-    "q50_pivot" -> pivotCountsSql,
-    "q54_cube" -> cubeAggSql,
-    "q55_event_deltas" -> eventDeltasSql,
-    "q56_ntile" -> ntileBucketsSql,
-    "q57_zscore" -> zscoreScaleSql,
-    "q59_purge_optout" -> purgeOptOutSql,
-    "q60_churn_setops" -> churnSetOpsSql,
-    "q61_full_outer" -> fullOuterReconSql,
-    "q62_sliding_window" -> slidingWindowAggSql,
-    "q64_quantiles" -> quantileStatsSql,
-    "q65_mad_outliers" -> madOutliersSql,
-    "q68_histogram" -> histogramBucketsSql,
-    "q69_corr_stats" -> corrStatsSql,
-    "q70_ewma" -> ewmaRecencySql,
-    "q71_rank_family" -> rankFamilySql,
-    "q72_schema_evolution" -> schemaEvolutionSql,
-    "q75_psi_drift" -> psiDriftSql,
-    "q78_grouping_sets" -> groupingSetsSql,
-    "q79_exists_subquery" -> existsSubquerySql,
-    "q80_winsorize" -> winsorizeSql,
-    "q81_mode" -> modeValueSql,
-    "q82_funnel" -> funnelSql,
-    "q83_retention" -> retentionCohortsSql,
-    "q84_share_of_hour" -> shareOfHourSql,
-    "q86_gap_fill" -> gapFillHourlySql,
-    "q87_scd2" -> scd2VersionsSql,
-    "q88_transitions" -> eventTransitionsSql,
-    "q92_linear_count" -> linearCountSql,
-    "q99_skyline" -> skylineCustomersSql,
-    "q101_attribution" -> lastTouchAttributionSql,
-    "q102_cuped" -> cupedReadoutSql,
-    "q103_trailing_window" -> trailingWindowSql,
-    "q104_quantile_normalize" -> quantileNormalizeSql,
-    "q105_unpivot" -> unpivotWideSql,
-    "q106_randomized_response" -> randomizedResponseSql,
-    "q107_snapshot_diff" -> snapshotDiffOrdersSql,
-    "q108_auc" -> aucCohortsSql,
-    "q109_chi2_screen" -> chi2ScreenSql,
-    "q110_interpolate" -> interpolateHourlySql,
-    "q111_purged_folds" -> purgedFoldsSql,
-    "q117_calibration" -> calibrationReadoutSql,
-    "q120_windowed_funnel" -> windowedFunnelSql,
-    "q121_ks_test" -> ksDriftSql,
-    "q122_spearman" -> spearmanStatsSql,
-    "q127_ols_trend" -> olsTrendSql,
-    "q132_delta_contribution" -> deltaContributionSql,
-    "q133_two_proportion_z" -> twoProportionZSql,
-    "q135_gap_features" -> gapFeaturesSql,
-    "q136_path_trigrams" -> pathTrigramsSql,
-    "q137_emd_drift" -> emdDriftSql,
-    "q138_srm_check" -> srmCheckSql,
-    "q143_jsd_drift" -> jsdDriftSql,
-    "q144_zorder_layout" -> zorderLayoutSql,
-    "q148_benford" -> benfordScreenSql,
-    "q149_event_lift" -> eventLiftSql,
-    "q150_kmv_distinct" -> kmvDistinctSql,
-    "q154_join_forecast" -> joinForecastSql,
-    "q155_seasonal_profile" -> seasonalProfileSql,
-    "q157_importance_weights" -> importanceWeightsSql,
-    "q161_burstiness" -> burstinessSql,
-    "q166_nearest_asof" -> nearestAsofSql,
-    "q167_time_to_convert" -> timeToConvertSql,
-    "q169_lateness_profile" -> latenessProfileSql,
-    "q173_zone_maps" -> zoneMapPruningSql,
-    "q177_column_stats" -> columnStatsSql,
-    "q177b_column_stats_sketch" -> columnStatsSketchSql,
-    "q228_incremental_rollup" -> incrementalRollupSql,
-    "q230_woe_iv" -> woeIvSql,
-    "q233_next_event" -> nextEventSql,
-    "q234_freshness" -> freshnessSql,
-    "q185_interval_overlap" -> intervalOverlapSql,
-    "q186_mann_whitney" -> mannWhitneySql,
-    "q187_kaplan_meier" -> kaplanMeierSql,
-    "q188_target_encoding" -> targetEncodingSql,
-    "q191_fairness_audit" -> fairnessAuditSql,
-    "q192_dp_counts" -> dpNoisyCountsSql,
-    "q194_kendall_tau" -> kendallSql,
-    "q197_markov_absorption" -> markovAbsorptionSql,
-    "q198_bootstrap_ci" -> bootstrapCISql,
-    "q202_forecast_backtest" -> forecastBacktestSql,
-    "q203_bitemporal_pit" -> bitemporalPitSql,
-    "q207_rfm_features" -> rfmFeaturesSql,
-    "q208_neyman_allocation" -> neymanAllocationSql,
-    "q209_mde_power" -> mdePowerSql,
-    "q210_overdispersion" -> overdispersionSql,
-    "q211_training_matrix" -> trainingMatrixSql,
-    "q213_sequential_looks" -> sequentialLooksSql,
-    "q214_delta_ratio" -> deltaMethodRatioSql,
-    "q216_feature_screen" -> featureScreenSql,
-    "q217_gains_table" -> gainsTableSql,
-    "q218_catalog_health" -> catalogHealthSql)
+  val catalog: Seq[Query] = Seq(
+    Query("q01_hourly_agg", hourlyAgg, hourlyAggSql),
+    Query("q02_filter_project", filterProject, filterProjectSql),
+    Query("q03_join_agg", joinAgg, joinAggSql),
+    Query("q04_case_when", caseWhen, caseWhenSql),
+    Query("q05_window_latest", windowLatest, windowLatestSql),
+    Query("q06_pit_join", pitJoin, pitJoinSql),
+    Query("q06b_pit_dense", pitDense, pitDenseSql),
+    Query("q06c_pit_multiview", pitMultiView, pitMultiViewSql),
+    Query("q06d_pit_multiview_coarse", pitMultiViewTtlLess,
+      pitMultiViewTtlLessSql),
+    Query("q07_materialize_latest", materializeLatest, materializeLatestSql),
+    Query("q08_distinct", distinctPairs, distinctPairsSql),
+    Query("q09_collect_set", collectSet, collectSetSql),
+    Query("q10_json_extract", jsonExtract, jsonExtractSql),
+    Query("q11_explode_tokens", explodeTokens, explodeTokensSql),
+    Query("q12_topn", topN, topNSql),
+    Query("q13_surrogate_key", surrogateKey, surrogateKeySql),
+    Query("q28_weather_gold", weatherGoldChain, weatherGoldChainSql),
+    Query("q29_map_flatten", mapFlatten, mapFlattenSql),
+    Query("q30_csv_roundtrip", csvRoundTrip, csvRoundTripSql),
+    Query("q31_avro_roundtrip", avroRoundTrip, avroRoundTripSql),
+    Query("q36_time_formats", timeFormats, timeFormatsSql),
+    Query("q46_json_roundtrip", jsonRoundTrip, jsonRoundTripSql),
+    Query("q47_orc_roundtrip", orcRoundTrip, orcRoundTripSql),
+    Query("q48_sessionize", sessionize, sessionizeSql),
+    Query("q49_rollup", rollupAgg, rollupAggSql),
+    Query("q50_pivot", pivotCounts, pivotCountsSql),
+    Query("q54_cube", cubeAgg, cubeAggSql),
+    Query("q55_event_deltas", eventDeltas, eventDeltasSql),
+    Query("q56_ntile", ntileBuckets, ntileBucketsSql),
+    Query("q57_zscore", zscoreScale, zscoreScaleSql),
+    Query("q59_purge_optout", purgeOptOut, purgeOptOutSql),
+    Query("q60_churn_setops", churnSetOps, churnSetOpsSql),
+    Query("q61_full_outer", fullOuterRecon, fullOuterReconSql),
+    Query("q62_sliding_window", slidingWindowAgg, slidingWindowAggSql),
+    Query("q64_quantiles", quantileStats, quantileStatsSql),
+    Query("q65_mad_outliers", madOutliers, madOutliersSql),
+    Query("q68_histogram", histogramBuckets, histogramBucketsSql),
+    Query("q69_corr_stats", corrStats, corrStatsSql),
+    Query("q70_ewma", ewmaRecency, ewmaRecencySql),
+    Query("q71_rank_family", rankFamily, rankFamilySql),
+    Query("q72_schema_evolution", schemaEvolution, schemaEvolutionSql),
+    Query("q75_psi_drift", psiDrift, psiDriftSql),
+    Query("q78_grouping_sets", groupingSets, groupingSetsSql),
+    Query("q79_exists_subquery", existsSubquery, existsSubquerySql),
+    Query("q80_winsorize", winsorize, winsorizeSql),
+    Query("q81_mode", modeValue, modeValueSql),
+    Query("q82_funnel", funnel, funnelSql),
+    Query("q83_retention", retentionCohorts, retentionCohortsSql),
+    Query("q84_share_of_hour", shareOfHour, shareOfHourSql),
+    Query("q86_gap_fill", gapFillHourly, gapFillHourlySql),
+    Query("q87_scd2", scd2Versions, scd2VersionsSql),
+    Query("q88_transitions", eventTransitions, eventTransitionsSql),
+    Query("q92_linear_count", linearCount, linearCountSql),
+    Query("q99_skyline", skylineCustomers, skylineCustomersSql),
+    Query("q101_attribution", lastTouchAttribution, lastTouchAttributionSql),
+    Query("q102_cuped", cupedReadout, cupedReadoutSql),
+    Query("q103_trailing_window", trailingWindow, trailingWindowSql),
+    Query("q104_quantile_normalize", quantileNormalize, quantileNormalizeSql),
+    Query("q105_unpivot", unpivotWide, unpivotWideSql),
+    Query("q106_randomized_response", randomizedResponse,
+      randomizedResponseSql),
+    Query("q107_snapshot_diff", snapshotDiffOrders, snapshotDiffOrdersSql),
+    Query("q108_auc", aucCohorts, aucCohortsSql),
+    Query("q109_chi2_screen", chi2Screen, chi2ScreenSql),
+    Query("q110_interpolate", interpolateHourly, interpolateHourlySql),
+    Query("q111_purged_folds", purgedFolds, purgedFoldsSql),
+    Query("q117_calibration", calibrationReadout, calibrationReadoutSql),
+    Query("q120_windowed_funnel", windowedFunnel, windowedFunnelSql),
+    Query("q121_ks_test", ksDrift, ksDriftSql),
+    Query("q122_spearman", spearmanStats, spearmanStatsSql),
+    Query("q127_ols_trend", olsTrend, olsTrendSql),
+    Query("q132_delta_contribution", deltaContribution, deltaContributionSql),
+    Query("q133_two_proportion_z", twoProportionZ, twoProportionZSql),
+    Query("q135_gap_features", gapFeatures, gapFeaturesSql),
+    Query("q136_path_trigrams", pathTrigrams, pathTrigramsSql),
+    Query("q137_emd_drift", emdDrift, emdDriftSql),
+    Query("q138_srm_check", srmCheck, srmCheckSql),
+    Query("q143_jsd_drift", jsdDrift, jsdDriftSql),
+    Query("q144_zorder_layout", zorderLayout, zorderLayoutSql),
+    Query("q148_benford", benfordScreen, benfordScreenSql),
+    Query("q149_event_lift", eventLift, eventLiftSql),
+    Query("q150_kmv_distinct", kmvDistinct, kmvDistinctSql),
+    Query("q154_join_forecast", joinForecast, joinForecastSql),
+    Query("q155_seasonal_profile", seasonalProfileQ, seasonalProfileSql),
+    Query("q157_importance_weights", importanceWeights, importanceWeightsSql),
+    Query("q161_burstiness", burstiness, burstinessSql),
+    Query("q166_nearest_asof", nearestAsof, nearestAsofSql),
+    Query("q167_time_to_convert", timeToConvert, timeToConvertSql),
+    Query("q169_lateness_profile", latenessProfile, latenessProfileSql),
+    Query("q173_zone_maps", zoneMapPruning, zoneMapPruningSql),
+    Query("q177_column_stats", columnStats, columnStatsSql),
+    Query("q177b_column_stats_sketch", columnStatsSketch, columnStatsSketchSql),
+    Query("q228_incremental_rollup", incrementalRollupQ, incrementalRollupSql),
+    Query("q230_woe_iv", woeIvQ, woeIvSql),
+    Query("q233_next_event", nextEventQ, nextEventSql),
+    Query("q234_freshness", freshnessQ, freshnessSql),
+    Query("q185_interval_overlap", intervalOverlap, intervalOverlapSql),
+    Query("q186_mann_whitney", mannWhitney, mannWhitneySql),
+    Query("q187_kaplan_meier", kaplanMeierQ, kaplanMeierSql),
+    Query("q188_target_encoding", targetEncoding, targetEncodingSql),
+    Query("q191_fairness_audit", fairnessAudit, fairnessAuditSql),
+    Query("q192_dp_counts", dpNoisyCounts, dpNoisyCountsSql),
+    Query("q194_kendall_tau", kendallQ, kendallSql),
+    Query("q197_markov_absorption", markovAbsorptionQ, markovAbsorptionSql),
+    Query("q198_bootstrap_ci", bootstrapCIQ, bootstrapCISql),
+    Query("q202_forecast_backtest", forecastBacktest, forecastBacktestSql),
+    Query("q203_bitemporal_pit", bitemporalPit, bitemporalPitSql),
+    Query("q207_rfm_features", rfmFeatures, rfmFeaturesSql),
+    Query("q208_neyman_allocation", neymanAllocation, neymanAllocationSql),
+    Query("q209_mde_power", mdePower, mdePowerSql),
+    Query("q210_overdispersion", overdispersion, overdispersionSql),
+    Query("q211_training_matrix", trainingMatrix, trainingMatrixSql),
+    Query("q213_sequential_looks", sequentialLooks, sequentialLooksSql),
+    Query("q214_delta_ratio", deltaMethodRatio, deltaMethodRatioSql),
+    Query("q216_feature_screen", featureScreen, featureScreenSql),
+    Query("q217_gains_table", gainsTable, gainsTableSql),
+    Query("q218_catalog_health", catalogHealth, catalogHealthSql))
 }

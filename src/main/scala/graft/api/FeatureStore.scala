@@ -482,11 +482,10 @@ final class FeatureStore(
       PointInTimeJoin.ViewRequest(fv, feats, reg.joinKeys(fv))
     }
     // The facade owns the entity cache so RetrievalJob.release() can
-    // unpersist it — PointInTimeJoin itself never persists (its
-    // cacheEntity stays false), avoiding blocks that outlive the
-    // retrieval. If the CALLER already cached this df, leave their
-    // cache alone (don't re-persist, and never unpersist it on
-    // release — that would clobber a cache we don't own).
+    // unpersist it — PointInTimeJoin itself never persists, avoiding
+    // blocks that outlive the retrieval. If the CALLER already cached
+    // this df, leave their cache alone (don't re-persist, and never
+    // unpersist it on release — that would clobber a cache we don't own).
     val persisted =
       if (cacheEntity &&
         entityDf.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
@@ -496,8 +495,7 @@ final class FeatureStore(
       PointInTimeJoin.retrieve(
         spark, persisted.getOrElse(entityDf), requests,
         entityTsCol = config.entityTimestampColumn,
-        fullFeatureNames = fullFeatureNames,
-        cacheEntity = false),
+        fullFeatureNames = fullFeatureNames),
       () => persisted.foreach(_.unpersist(false)))
   }
 

@@ -788,38 +788,35 @@ object functions {
     GraftSqlBridge.column(MaxSimMicros(
       GraftSqlBridge.expression(q), GraftSqlBridge.expression(c), nTok, tokDim))
 
-  /** Register the custom expressions for SQL use in a session. */
-  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "rolling_hash", exprs => RollingHash(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "simhash64", exprs => SimHash64(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_product", exprs => DotProduct(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "normalized_md5", exprs => NormalizedMd5(exprs.head), "scala_udf")
-    def intLit(e: Expression, what: String): Int = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-      case other => throw new IllegalArgumentException(
-        s"$what must be an integer literal, got $other")
-    }
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "word_shingles",
-      exprs => WordShingles(exprs.head, intLit(exprs(1), "word_shingles n")),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "minhash_sigs",
-      exprs => MinHashSigs(exprs.head, intLit(exprs(1), "minhash_sigs n")),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "nfc_normalize", exprs => NfcNormalize(exprs.head), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "interleave_bits", exprs => InterleaveBits(exprs(0), exprs(1)), "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "q_grams_occ",
-      exprs => QGramsWithOcc(exprs.head, intLit(exprs(1), "q_grams_occ q")),
-      "scala_udf")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "quantize_i8", exprs => QuantizeI8(exprs.head), "scala_udf")
+  /** A SQL call's literal `Int` argument (`word_shingles(text, 3)`): the
+    * expressions take it at construction, so a column-valued one fails. */
+  private def intLit(e: Expression, what: String): Int = e match {
+    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
+    case other => throw new IllegalArgumentException(
+      s"$what must be an integer literal, got $other")
   }
+
+  /** Every custom expression's SQL name and builder: the one table that
+    * [[registerAll]] and [[graft.GraftExtensions]] both register. */
+  val sqlFunctions: Seq[(String, Seq[Expression] => Expression)] = Seq(
+    ("rolling_hash", es => RollingHash(es.head)),
+    ("simhash64", es => SimHash64(es.head)),
+    ("dot_product", es => DotProduct(es(0), es(1))),
+    ("normalized_md5", es => NormalizedMd5(es.head)),
+    ("word_shingles",
+      es => WordShingles(es.head, intLit(es(1), "word_shingles n"))),
+    ("minhash_sigs",
+      es => MinHashSigs(es.head, intLit(es(1), "minhash_sigs n"))),
+    ("nfc_normalize", es => NfcNormalize(es.head)),
+    ("interleave_bits", es => InterleaveBits(es(0), es(1))),
+    ("q_grams_occ",
+      es => QGramsWithOcc(es.head, intLit(es(1), "q_grams_occ q"))),
+    ("quantize_i8", es => QuantizeI8(es.head)))
+
+  /** Register the custom expressions for SQL use in a session. */
+  def registerAll(spark: org.apache.spark.sql.SparkSession): Unit =
+    sqlFunctions.foreach { case (name, build) =>
+      spark.sessionState.functionRegistry
+        .createOrReplaceTempFunction(name, build, "scala_udf")
+    }
 }

@@ -77,8 +77,7 @@ object PointInTimeJoin {
       requests: Seq[ViewRequest],
       entityTsCol: String = "event_timestamp",
       fullFeatureNames: Boolean = true,
-      prefilterByEntityRange: Boolean = true,
-      cacheEntity: Boolean = false): DataFrame = {
+      prefilterByEntityRange: Boolean = true): DataFrame = {
 
     require(entityDf0.columns.contains(entityTsCol),
       s"entity dataframe lacks timestamp column '$entityTsCol'")
@@ -86,33 +85,11 @@ object PointInTimeJoin {
     // The reference mixes string- and timestamp-typed event timestamps
     // (SURVEY §7.4.2); normalize string entity timestamps at the boundary
     // so the as-of comparisons are always typed.
-    val entityDf1 =
+    val entityDf =
       if (entityDf0.schema(entityTsCol).dataType ==
         org.apache.spark.sql.types.StringType)
         entityDf0.withColumn(entityTsCol, to_timestamp(col(entityTsCol)))
       else entityDf0
-
-    // The entity df is consumed twice (the min/max bounds agg and the
-    // first key group's scan). For non-trivial entity inputs,
-    // persisting avoids recomputing its lineage for the second pass — the
-    // distributed analogue of the reference materializing the entity df
-    // as a temp view (without its driver round-trip). NOTE: a caller
-    // passing cacheEntity=true owns the unpersist; the FeatureStore
-    // facade instead persists caller-side and releases via
-    // RetrievalJob.release(). That ownership contract is only
-    // honorable when the frame we persist IS the caller's frame: the
-    // string-timestamp normalization above builds a NEW plan the
-    // caller holds no reference to, so caching it would pin blocks no
-    // unpersist can ever reach — refuse loudly instead of leaking.
-    require(!cacheEntity || (entityDf1 eq entityDf0),
-      s"cacheEntity=true with a string-typed '$entityTsCol' would persist " +
-        "an internal normalized frame the caller can never unpersist — " +
-        "cast the column to timestamp caller-side first (to_timestamp), " +
-        "or use FeatureStore.getHistoricalFeatures, which owns its cache")
-    val entityDf =
-      if (cacheEntity)
-        entityDf1.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else entityDf1
 
     // Driver-side scalar bounds for scan pruning (one tiny agg job, the
     // same trick as the reference's interpolated '<max entity ts>' literal,
@@ -148,8 +125,8 @@ object PointInTimeJoin {
     // prefilterByEntityRange=false — matching the prefilter=true path
     // rather than lazily returning an empty result. An empty entity df
     // in a PIT retrieval is a caller bug, not a degenerate input.
-    if (!(entityDf1 eq entityDf0) ||
-      entityDf1.schema(entityTsCol).nullable) { val _ = minEntityTs }
+    if (!(entityDf eq entityDf0) ||
+      entityDf.schema(entityTsCol).nullable) { val _ = minEntityTs }
 
     requests.foreach { case ViewRequest(fv, _, joinKeys) =>
       joinKeys.foreach { k =>

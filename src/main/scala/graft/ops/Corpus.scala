@@ -213,13 +213,9 @@ object Corpus {
     * row); the quota table broadcasts for the final per-source cutoff.
     * Output: (id, source, rn) with rn ≤ quota — rn is the mix order, so
     * downstream can trim further without re-ranking.
-    *
-    * @param numSalts retained for API stability; unused since the r22
-    *   aggTopK migration (the heap cut needs no salting).
     */
   def sampleToQuotas(df: DataFrame, sourceCol: String, idCol: String,
-      quotas: DataFrame, quotaCol: String = "quota",
-      numSalts: Int = 16): DataFrame = {
+      quotas: DataFrame, quotaCol: String = "quota"): DataFrame = {
     require(quotaCol != "rn", "quotaCol collides with the emitted rank column")
     // cast before reading: Int-typed quota tables are the natural caller
     // shape; null/empty quota tables mean "keep nothing"
@@ -472,9 +468,8 @@ object Corpus {
     * emitted number hash-gates with no rounding step.
     *
     * Scale: one keyed total agg (broadcast, source-cardinality rows) +
-    * one per-source ranking window (the [[sampleToQuotas]] salted
-    * two-phase valve applies verbatim if a single source outgrows its
-    * reducer).
+    * one per-source ranking window (the [[sampleToQuotas]] bounded-heap
+    * cut applies if a single source outgrows its reducer).
     */
   def tokenBudgetSample(df: DataFrame, sourceCol: String, idCol: String,
       textCol: String, num: Int = 1, den: Int = 2): DataFrame = {
@@ -565,12 +560,9 @@ object Corpus {
     * frames. The cap is the valve: serving-size postings are what
     * downstream retrieval consumes; full lists are a different
     * operator (and a different storage layout) at 100 TB.
-    *
-    * @param numSalts retained for API stability; unused since the r22
-    *   aggTopKArray migration (the heap cut needs no salting).
     */
   def invertedIndex(df: DataFrame, idCol: String, textCol: String,
-      postingCap: Int = 32, numSalts: Int = 16): DataFrame = {
+      postingCap: Int = 32): DataFrame = {
     require(postingCap >= 1, "postingCap must be positive")
     val td = df
       .select(col(idCol).as("doc_id"),

@@ -20,8 +20,18 @@ class QueriesSpec extends SparkSpec {
   }
 
   test("every oracle key has a matching query") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracles without queries: $orphans")
+    assert(SparkEntry.oracleSql.keySet === SparkEntry.queries.keySet)
+    // the contract maps keep the last of a duplicated name, so count on
+    // the catalogue lists themselves
+    val names = SparkEntry.catalog.map(_.name)
+    val twice = names.diff(names.distinct)
+    assert(twice.isEmpty, s"names listed twice: $twice")
+    assert(names.size === 263)
+    // an oracle val declared below its object's `catalog` is still null
+    // when the catalogue is built
+    val blank = SparkEntry.catalog
+      .filter(q => q.oracle == null || q.oracle.trim.isEmpty).map(_.name)
+    assert(blank.isEmpty, s"null or blank oracles: $blank")
   }
 
   test("entry returns rows on the smoke fixture (driver contract)") {

@@ -464,8 +464,7 @@ class CorpusSpec extends SparkSpec {
     val docs = Seq(
       (5L, "a b a"), (1L, "a c"), (3L, "a"), (9L, "b b")
     ).toDF("doc_id", "text")
-    val got = Corpus.invertedIndex(docs, "doc_id", "text",
-      postingCap = 2, numSalts = 4)
+    val got = Corpus.invertedIndex(docs, "doc_id", "text", postingCap = 2)
       .orderBy("term").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getSeq[Long](3)))
     // a: docs {1,3,5}, cf 4 (doc 5 has it twice), postings capped to 2 lowest
@@ -534,7 +533,7 @@ class CorpusSpec extends SparkSpec {
   test("feature hash: signed buckets cancel, multiplicity counted, dim bound") {
     import org.apache.spark.sql.functions.col
     val toks = Seq((1L, "x x y"), (2L, "x")).toDF("doc_id", "text")
-    val out = graft.OpsQueries.ops("q97_feature_hash")(spark, sf0001)
+    val out = graft.SparkEntry.queries("q97_feature_hash")(spark, sf0001)
     val rows = out.limit(2000).collect()
     assert(rows.nonEmpty)
     assert(rows.forall(r => r.getLong(1) >= 0 && r.getLong(1) < 1024))

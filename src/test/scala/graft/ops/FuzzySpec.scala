@@ -153,5 +153,5 @@ class FuzzySpec extends SparkSpec {
 /** Access shim so the spec can run the exact catalog entry. */
 private object OpsQueriesAccess {
   def fuzzy(s: org.apache.spark.sql.SparkSession, dir: String) =
-    graft.OpsQueries.ops("q85_fuzzy_match")(s, dir)
+    graft.SparkEntry.queries("q85_fuzzy_match")(s, dir)
 }

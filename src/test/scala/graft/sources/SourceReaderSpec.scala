@@ -136,6 +136,20 @@ class SourceReaderSpec extends SparkSpec {
       "quantize_i8(array(1.0d, -1.0d)) AS q").head()
     assert(more.getSeq[String](0).size === 3)
     assert(more.getSeq[Int](1) === Seq(127, -127))
+    // every name in the one function table resolves, and the three not
+    // evaluated above build and evaluate from SQL too
+    graft.functions.functions.sqlFunctions.foreach { case (name, _) =>
+      assert(spark.catalog.functionExists(name), s"$name is not registered")
+    }
+    val rest = spark.sql("SELECT simhash64(array('a', 'b')) AS s, " +
+      "nfc_normalize('e\u0301') AS n, " +
+      "interleave_bits(CAST(1 AS BIGINT), CAST(2 AS BIGINT)) AS z").head()
+    assert(rest.getLong(0) === graft.functions.SimHash64.evalImpl(
+      org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array(
+        org.apache.spark.unsafe.types.UTF8String.fromString("a"),
+        org.apache.spark.unsafe.types.UTF8String.fromString("b")))))
+    assert(rest.getString(1) === "\u00e9")
+    assert(rest.getLong(2) === 9L)
     // the extensions injector itself covers the full set without error
     new graft.GraftExtensions()
       .apply(new org.apache.spark.sql.SparkSessionExtensions)
